@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Multi-dimensional data LAYOUT: Z-order (Morton) clustering, so a
   * scan filtered on ANY of the clustered columns skips most files via
@@ -17,13 +24,19 @@ import org.apache.spark.sql.functions._
   * of) the clustered columns and the worst-case dimension decides
   * scan cost.
   *
-  * Everything is built from codegen'd builtin expressions: the
-  * quantile bucketing is a fold over a boundary-array literal, the
-  * bit interleave is shift/mask arithmetic. The only driver work is
-  * one `approxQuantile` pass (bounded: `2^bits - 1` doubles per
-  * column) to learn boundaries — the same sketch a warehouse keeps in
-  * table stats; quantile bucketing (rather than min/max linear
-  * scaling) keeps the grid occupancy uniform under skew.
+  * The z-value is codegen'd end to end: the quantile bucketing is the
+  * native `graft_bucket` kernel (a binary search over the boundary
+  * array), the bit interleave is shift/mask arithmetic. The only
+  * driver work is one `approxQuantile` pass (bounded: `2^bits - 1`
+  * doubles per column) to learn boundaries — the same sketch a
+  * warehouse keeps in table stats; quantile bucketing (rather than
+  * min/max linear scaling) keeps the grid occupancy uniform under
+  * skew.
+  *
+  * The layout audit ([[footerSpans]], [[fileSpans]],
+  * [[skippableFiles]]) reads only parquet footers: the per-row-group
+  * min/max statistics that footer pruning itself consults, with no
+  * Spark job.
   *
   * At 100 TB: `zorderWrite`'s range partition on the z-value is one
   * shuffle; each output task writes one z-contiguous file. Re-cluster
@@ -45,15 +58,13 @@ object Layout {
   }
 
   /** Bucket index of `c` in [0, 2^bits): the number of boundaries
-    * STRICTLY below the value, as a fold over the boundary-array
-    * literal (codegen'd; no UDF, no join). Strict comparison matters
-    * for discrete columns: duplicated values make quantile boundaries
-    * coincide with the values themselves, and `>=` would merge a
-    * boundary value with the bucket above it.
+    * STRICTLY below the value (the `graft_bucket` kernel). Strict
+    * comparison matters for discrete columns: duplicated values make
+    * quantile boundaries coincide with the values themselves, and `>=`
+    * would merge a boundary value with the bucket above it.
     */
   private def bucketExpr(c: Column, bs: Array[Double]): Column =
-    aggregate(lit(bs), lit(0),
-      (acc, b) => acc + when(c.cast("double") > b, 1).otherwise(0))
+    call_function("graft_bucket", c.cast("double"), lit(bs))
 
   /** Morton interleave of per-column bucket indexes: bit i of
     * dimension d lands at position `i * D + d`. Pure shift/mask
@@ -77,6 +88,7 @@ object Layout {
     require(cols.size >= 2, "z-ordering one column is just a sort")
     require(cols.size * bits <= 63,
       s"${cols.size} cols x $bits bits overflows a long z-value")
+    graft.plans.GraftExtensions.ensureRegistered(df.sparkSession)
     val bs = boundaries(df, cols, bits)
     interleave(cols.zip(bs).map { case (c, b) => bucketExpr(col(c), b) }, bits)
   }
@@ -101,6 +113,18 @@ object Layout {
   final case class CompactionStats(filesIn: Long, bytesIn: Long,
                                    filesOut: Long, bytesOut: Long)
 
+  /** The data files of a flat parquet directory (no `_SUCCESS`-style
+    * metadata or hidden files).
+    */
+  private def dataFiles(spark: SparkSession, dir: String): Array[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
   /** Small-file compaction — the maintenance pass every streaming
     * sink needs: a file-source stream committing a batch per trigger
     * leaves thousands of KB-sized parquet files, and at 100 TB the
@@ -116,57 +140,131 @@ object Layout {
     * partition directory — run one pass per partition, which also
     * keeps each rewrite's failure domain small).
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
+  def compact(spark: SparkSession, inPath: String,
               outPath: String, targetFileBytes: Long = 128L << 20): CompactionStats = {
     require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
-    def dataFiles(dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
-    val in = dataFiles(inPath)
+    val in = dataFiles(spark, inPath)
     require(in.nonEmpty, s"$inPath has no data files to compact")
     val bytesIn = in.map(_.getLen).sum
     val nOut = math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
     spark.read.parquet(inPath)
       .coalesce(nOut)
       .write.mode("overwrite").parquet(outPath)
-    val out = dataFiles(outPath)
+    val out = dataFiles(spark, outPath)
     CompactionStats(in.length.toLong, bytesIn, out.length.toLong, out.map(_.getLen).sum)
   }
 
-  /** Per-file min/max spans of `cols` under `path` — the same stats a
-    * parquet reader's footer pruning consults, surfaced as a frame so
-    * layouts can be audited (and asserted on in specs). One row per
-    * file: (file, n_rows, <c>_min, <c>_max ...).
+  /** One parquet file's footer statistics for the audited columns:
+    * its row count and, per column, [min, max] over all its row
+    * groups. A span is None when some row group wrote no min/max
+    * statistics, or when the column holds only nulls: a footer-pruned
+    * scan cannot skip such a file on that column.
     */
-  def fileSpans(spark: org.apache.spark.sql.SparkSession, path: String,
-                cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
+  final case class FileSpan(file: String, rows: Long,
+                            spans: Map[String, Option[(Number, Number)]]) {
+    /** Footer pruning may skip this file for `lo <= c <= hi`: its
+      * whole [min, max] span of `c` lies outside the interval.
+      */
+    def misses(c: String, lo: Double, hi: Double): Boolean =
+      spans(c).exists { case (mn, mx) => mx.doubleValue < lo || mn.doubleValue > hi }
+  }
+
+  /** Spark type of a footer column. Spans cover the plain numeric
+    * columns box filters run on; any other encoding fails loudly
+    * rather than have its statistics guessed at.
+    */
+  private def statType(c: String, t: PrimitiveType): DataType =
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT32, null) => IntegerType
+      case (PrimitiveTypeName.INT32, i: IntLogicalTypeAnnotation)
+          if i.isSigned && i.getBitWidth == 32 => IntegerType
+      case (PrimitiveTypeName.INT64, null) => LongType
+      case (PrimitiveTypeName.INT64, i: IntLogicalTypeAnnotation)
+          if i.isSigned && i.getBitWidth == 64 => LongType
+      case (PrimitiveTypeName.FLOAT, null) => FloatType
+      case (PrimitiveTypeName.DOUBLE, null) => DoubleType
+      case _ => throw new IllegalArgumentException(
+        s"no footer span for column $c of parquet type $t: spans cover " +
+          "int, long, float and double columns")
+    }
+
+  /** The Spark types of `cols` and the footer spans of every file of
+    * the flat directory `path` that holds at least one row. Reads only
+    * the footers (`readFooter`: no data pages, no Spark job).
+    */
+  private def readSpans(spark: SparkSession, path: String,
+                        cols: Seq[String]): (Seq[DataType], Seq[FileSpan]) = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = dataFiles(spark, path).sortBy(_.getPath.getName).toSeq
+    require(files.nonEmpty, s"$path has no data files to audit")
+    val read = files.map { st =>
+      val footer = ParquetFileReader.readFooter(conf, st, ParquetMetadataConverter.NO_FILTER)
+      val schema = footer.getFileMetaData.getSchema
+      val blocks = footer.getBlocks.asScala.toSeq
+      val types = cols.map { c =>
+        require(schema.containsField(c), s"${st.getPath} has no column $c")
+        statType(c, schema.getFields.get(schema.getFieldIndex(c)).asPrimitiveType())
+      }
+      val spans = cols.map { c =>
+        val chunks = blocks.map(_.getColumns.asScala
+          .find(_.getPath.toDotString == c).get.getStatistics)
+        val span =
+          if (chunks.isEmpty || chunks.exists(s => s == null || s.isEmpty)) None
+          else {
+            val merged = chunks.reduce { (a, b) => a.mergeStatistics(b); a }
+            if (merged.hasNonNullValue)
+              Some((merged.genericGetMin.asInstanceOf[Number],
+                merged.genericGetMax.asInstanceOf[Number]))
+            else None
+          }
+        c -> span
+      }
+      (types, FileSpan(st.getPath.toString, blocks.map(_.getRowCount).sum, spans.toMap))
+    }
+    (read.head._1, read.map(_._2).filter(_.rows > 0))
+  }
+
+  /** Footer spans of `cols` for every file under the flat directory
+    * `path` that holds at least one row — the stats a parquet
+    * reader's footer pruning consults, read without a data scan.
+    */
+  def footerSpans(spark: SparkSession, path: String,
+                  cols: Seq[String]): Seq[FileSpan] =
+    readSpans(spark, path, cols)._2
+
+  /** Per-file min/max spans of `cols` under `path`, from the parquet
+    * footers ([[footerSpans]]) as a frame, so layouts can be audited
+    * (and asserted on in specs). One row per file holding at least
+    * one row: (file, n_rows, <c>_min, <c>_max ...); a column with no
+    * usable statistics in a file has null min and max.
+    */
+  def fileSpans(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
+    val (types, spans) = readSpans(spark, path, cols)
+    val schema = StructType(
+      Seq(StructField("file", StringType), StructField("n_rows", LongType)) ++
+        cols.zip(types).flatMap { case (c, t) =>
+          Seq(StructField(s"${c}_min", t), StructField(s"${c}_max", t))
+        })
+    val rows = spans.map { f =>
+      Row.fromSeq(Seq(f.file, f.rows) ++ cols.flatMap { c =>
+        f.spans(c).fold(Seq[Any](null, null)) { case (mn, mx) => Seq(mn, mx) }
+      })
+    }
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
   }
 
   /** How many of `path`'s files a conjunctive box filter
     * `lo(c) <= c <= hi(c)` could skip on footer stats alone:
     * files whose [min, max] span misses the box on ANY clustered
-    * column. Returns (n_files, n_skippable).
+    * column (a file without a span on a column never counts as
+    * skippable on it). Returns (n_files, n_skippable).
     */
-  def skippableFiles(spark: org.apache.spark.sql.SparkSession, path: String,
+  def skippableFiles(spark: SparkSession, path: String,
                      box: Map[String, (Double, Double)]): (Long, Long) = {
-    val spans = fileSpans(spark, path, box.keys.toSeq)
-    val overlaps = box.map { case (c, (lo, hi)) =>
-      col(s"${c}_max").cast("double") >= lo && col(s"${c}_min").cast("double") <= hi
-    }.reduce(_ && _)
-    // both counts in one action — two would re-scan the dir per call
-    val r = spans.agg(count(lit(1)).as("n"),
-      sum(when(overlaps, 1L).otherwise(0L)).as("hit")).head()
-    val total = r.getLong(0)
-    (total, total - r.getLong(1))
+    val spans = footerSpans(spark, path, box.keys.toSeq)
+    val skippable = spans.count(f =>
+      box.exists { case (c, (lo, hi)) => f.misses(c, lo, hi) })
+    (spans.size.toLong, skippable.toLong)
   }
 }

@@ -66,6 +66,9 @@ object GraftExtensions {
       new ExpressionInfo(classOf[TermCounts].getName, "graft_term_counts"),
       (children: Seq[Expression]) => TermCounts(children(0),
         children.tail.zipWithIndex.map { case (c, i) => strLit(c, s"term$i") })),
+    (new FunctionIdentifier("graft_bucket"),
+      new ExpressionInfo(classOf[BucketIndex].getName, "graft_bucket"),
+      (children: Seq[Expression]) => BucketIndex(children(0), children(1))),
     // Spark's OWN codegen'd Bloom probe (the expression behind its
     // injected runtime filters), exposed as a callable function:
     // children(0) = the serialized util.sketch filter (a foldable

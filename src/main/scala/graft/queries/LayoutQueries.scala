@@ -7,10 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-layout surface: Z-order clustering demo over lineitem and
-  * small-file compaction over documents. layout_zorder has no SQL
-  * oracle — its subject is file LAYOUT (which parquet files a
-  * footer-pruned scan could skip), which DuckDB over the same logical
-  * rows cannot express; LayoutSpec carries the strong assertions.
+  * small-file compaction over documents. layout_zorder's subject is
+  * file LAYOUT (which parquet files a footer-pruned scan could skip),
+  * which DuckDB over the same logical rows cannot express: its oracle
+  * pins the layout facts as literals and recomputes only the filter
+  * selectivity, and LayoutSpec carries the per-file assertions.
   * layout_compact hash-verifies: its output is read from the
   * compacted COPY, so the oracle over the original table proves
   * row conservation.
@@ -214,41 +215,35 @@ object LayoutQueries {
         max(col("l_suppkey")).cast("double")).head()
       val dims = Seq("l_partkey" -> (0.45 * mx.getDouble(0), 0.55 * mx.getDouble(0)),
         "l_suppkey" -> (0.45 * mx.getDouble(1), 0.55 * mx.getDouble(1)))
-      // r16 (guide §2.6): the four (layout, dim) probes are
-      // independent job chains of tiny actions (footer spans, pruned
-      // scan counts) — run them from a thread pool so each chain's
-      // tail back-fills the cores the others leave idle, instead of
-      // serializing ~14 small jobs. Row values and order are
-      // unchanged: futures are collected in combo order and the
-      // result is orderBy'd regardless.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
+      val layouts = Seq("linear_partkey" -> linDir, "zorder" -> zDir)
+      // The footers say which files each filter may skip (no Spark
+      // job); ONE scan over both layouts then counts, per (layout,
+      // dim), the rows in the box and those of them living in a file
+      // the footers called skippable. The scan applies no filter, so
+      // parquet pushdown cannot prune the very files under audit.
       val combos = for {
-        (layout, dir) <- Seq(("linear_partkey", linDir), ("zorder", zDir))
+        (layout, dir) <- layouts
+        spans = Layout.footerSpans(s, dir, dims.map(_._1))
         (dim, (lo, hi)) <- dims
-      } yield (layout, dir, dim, lo, hi)
-      val rows = Await.result(
-        Future.sequence(combos.map { case (layout, dir, dim, lo, hi) => Future {
-        val spans = Layout.fileSpans(s, dir, Seq(dim)).persist()
-        val nFiles = spans.count()
-        val skipped = spans
-          .filter(!(col(s"${dim}_max").cast("double") >= lo &&
-            col(s"${dim}_min").cast("double") <= hi))
-          .select(col("file")).collect().map(_.getString(0)).toSet
-        spans.unpersist()
-        val scan = s.read.parquet(dir)
-          .filter(col(dim).cast("double") >= lo && col(dim).cast("double") <= hi)
-        val nMatch = scan.count()
-        val skippedMatches =
-          if (skipped.isEmpty) 0L
-          else scan.withColumn("__f", input_file_name())
-            .filter(col("__f").isin(skipped.toSeq: _*)).count()
-        (layout, dim, nFiles, skipped.nonEmpty, skippedMatches == 0L, nMatch)
-      } }), Duration.Inf)
-      rows.toDF("layout", "filter_dim", "n_files", "prunes", "skip_sound",
-          "n_match")
+      } yield (layout, dim, lo, hi, spans.size.toLong, spans
+        .filter(_.misses(dim, lo, hi))
+        .map(f => new org.apache.hadoop.fs.Path(f.file).getName))
+      val counts = combos.flatMap { case (layout, dim, lo, hi, _, skipped) =>
+        val hit = col("layout") === layout &&
+          col(dim).cast("double") >= lo && col(dim).cast("double") <= hi
+        Seq(count_if(hit), count_if(hit && col("file").isin(skipped: _*)))
+      }
+      val dimSchema = org.apache.spark.sql.types.StructType(dims.map(x => li.schema(x._1)))
+      val counted = layouts.map { case (layout, dir) =>
+        s.read.schema(dimSchema).parquet(dir)
+          .withColumn("layout", lit(layout))
+          .withColumn("file", col("_metadata.file_name"))
+      }.reduce(_ union _)
+        .agg(counts.head, counts.tail: _*).head()
+      combos.zipWithIndex.map { case ((layout, dim, _, _, nFiles, skipped), i) =>
+        (layout, dim, nFiles, skipped.nonEmpty,
+          counted.getLong(2 * i + 1) == 0L, counted.getLong(2 * i))
+      }.toDF("layout", "filter_dim", "n_files", "prunes", "skip_sound", "n_match")
         .orderBy(col("layout"), col("filter_dim"))
     }))
 

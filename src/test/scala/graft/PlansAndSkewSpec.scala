@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Skew
 import graft.plans.GraftExtensions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class PlansAndSkewSpec extends SparkSpec {
@@ -25,6 +26,35 @@ class PlansAndSkewSpec extends SparkSpec {
     val plan = emb.select(expr("graft_cosine(embedding, embedding)"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), plan)
+  }
+
+  test("graft_bucket equals the aggregate fold it replaced, and codegens") {
+    GraftExtensions.ensureRegistered(spark)
+    val inf = Double.PositiveInfinity
+    // ties among the boundaries, both zeros, both infinities and NaN
+    val bs = Array(-inf, -1.0, -0.0, 0.0, 1.0, 1.0, 1.0, 2.5, inf, Double.NaN)
+    val xs = Seq[Option[Double]](None, Some(Double.NaN), Some(inf), Some(-inf),
+      Some(-0.0), Some(0.0), Some(1.0), Some(2.5), Some(0.5), Some(3.0), Some(-5.0))
+    // the pre-kernel z-order bucketing: count the boundaries below x
+    def fold(x: Column, b: Array[Double]): Column =
+      aggregate(lit(b), lit(0), (acc, y) => acc + when(x > y, 1).otherwise(0))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucket").toString
+    xs.toDF("x").write.mode("overwrite").parquet(dir)
+    // local relation (interpreted eval) and parquet scan (generated code)
+    for (df <- Seq(xs.toDF("x"), spark.read.parquet(dir)); b <- Seq(bs, bs.reverse)) {
+      val got = df.select(col("x"),
+          call_function("graft_bucket", col("x"), lit(b)), fold(col("x"), b))
+        .collect()
+      assert(got.length == xs.size)
+      got.foreach(r => assert(r.getInt(1) == r.getInt(2), r.toString))
+      assert(got.filter(_.isNullAt(0)).forall(_.getInt(1) == 0), "null lands in bucket 0")
+    }
+    val plan = spark.read.parquet(dir)
+      .select(call_function("graft_bucket", col("x"), lit(bs)))
+      .queryExecution.executedPlan
+    assert(plan.toString.contains("*(1)"), plan.toString)
+    assert(org.apache.spark.sql.execution.debug.codegenString(plan)
+      .contains("BucketKernel.rank"), "the kernel must run inside generated code")
   }
 
   test("bucketed join elides the shuffle on both sides") {
