@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** One query's round record: steady median / cold / min wall, the
     * normalized static-plan fingerprint, and the steady-pass movement
@@ -10,24 +9,7 @@ object Bench {
                                m: BenchMetricsListener.Snapshot)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same master override as Verify (r13 judge ask #2): local-cluster
-    // runs price executor-side serialization + transport — used for
-    // the multi-JVM overhead probe, never for the canonical snapshot
-    // (the noise gate + driver-rung pin below keep side runs out).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     // steady-state timing: one untimed pass per query absorbs
     // codegen/JIT compilation, then the MEDIAN of three timed passes
     // is reported — single-run totals swing ±20% (JIT/GC in one JVM)
@@ -155,7 +137,6 @@ object Bench {
             pb.environment().put("SPARK_GRAFT_BENCH_QUERIES", q)
             pb.environment().put("SPARK_GRAFT_BENCH_OUT", out)
             pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-            pb.environment().put("SPARK_GRAFT_CPUS", cpus)
             pb.environment().put("SPARK_GRAFT_BENCH_ITERS", "3")
             pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
             pb.redirectError(ProcessBuilder.Redirect.DISCARD)
@@ -267,7 +248,7 @@ object Bench {
     // canonical file with local[8] numbers, r16 session 2): the
     // canonical record is pinned to the full local[32] topology.
     val driverRung = sfDir == "/root/testdata/sf0.1" &&
-      !master.startsWith("local-cluster") && cpus == "32"
+      spark.sparkContext.master == "local[32]"
     // noise gate on the canonical snapshot (r13 ask #1): the r12
     // committed record was captured in a window where the suite total
     // ran 14% above the same-run queries_min sum — host interference,

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Regenerates PLANS.md — the physical-plan audit snapshot for the
+/** Prints the physical-plan audit snapshot PLANS.md opens with, for the
   * representative query set (`runMain graft.PlanAudit`). Dev tool;
   * replaces the old REPL script (tools/plans.sc), which hit Scala
   * console classloader bugs once the query set grew.
@@ -509,14 +508,10 @@ object PlanAudit {
         "regression canary."))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-plan-audit")
     val d = "/root/testdata/sf0.001"
-    // With explicit query names: print just those plans to stdout
-    // (quick iteration) instead of regenerating PLANS.md.
+    // With explicit query names: print just those plans (quick
+    // iteration) instead of the whole snapshot.
     if (args.nonEmpty) {
       args.foreach { n =>
         println(s"== $n ==")
@@ -528,7 +523,9 @@ object PlanAudit {
     }
     val sb = new StringBuilder(
       "# Physical plans (explain formatted) — audit snapshot, sf0.001\n\n" +
-        "Regenerate with `tools/runmain.sh graft.PlanAudit` (after `sbt compile`).\n")
+        "Regenerate with `tools/runmain.sh graft.PlanAudit > snapshot.md` " +
+        "(after `sbt compile`) and merge it over the per-query sections " +
+        "above the hand-written notes at the end of PLANS.md.\n")
     names.foreach { n =>
       sb.append(s"\n## $n\n\n")
       notes.get(n).foreach(note => sb.append(note + "\n\n"))
@@ -537,9 +534,10 @@ object PlanAudit {
         .explainString(FormattedMode).take(4000))
       sb.append("\n```\n")
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"[plans] wrote ${names.length} sections")
+    // stdout, not PLANS.md: the committed file carries hand-written
+    // rationale sections after the snapshot (tools/planhash_diff.py
+    // asks for one per baseline refresh) that a rewrite would drop
+    print(sb.toString)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Adversarial-corpus rung generator (r13 judge ask #3): a
   * `documents` table of the unicode pathologies web-crawl data
@@ -210,13 +210,7 @@ object R14AdversarialGen {
     // second arg: big-doc divisor (e.g. 64 -> the oracle-feasible
     // `nobig` rung with ~16-64 KB docs of the same shapes)
     val bigScale = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-adversarial-gen")
     import spark.implicits._
 
     // companion tables: byte-copy the sf0.001 files so every oracle

@@ -5,8 +5,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import scala.collection.immutable.SortedMap
 
-import org.apache.spark.sql.SparkSession
-
 /** Concurrent multi-query contract (round 14, follow-on to the
   * redundant-execution determinism axis): a deployed engine is SHARED
   * — a thrift server, a notebook kernel, a pipeline scheduler all run
@@ -22,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * collision) — this harness makes the contract a measured gate
   * instead of an incident class.
   *
-  * Two drills over the full gate roster, one shared local[32]
-  * session, FAIR scheduler with one pool per worker thread:
+  * Two drills over the full gate roster, one shared [[GraftSession]],
+  * FAIR scheduler with one pool per worker thread:
   *
   *  1. `concurrent` — the roster partitioned across N worker threads,
   *     every query's order-free content hash compared to the serial
@@ -86,18 +84,10 @@ object R14Concurrent {
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
       qs.toSeq.sorted
     })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-concurrent")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // FAIR: the worker threads' jobs round-robin across one pool per
+    // thread instead of queueing FIFO behind whichever thread came first
+    val spark = GraftSession("graft-concurrent",
+      Map("spark.scheduler.mode" -> "FAIR"))
 
     def lap[T](tag: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime()

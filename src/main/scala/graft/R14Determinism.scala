@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions.col
   * execution history, by re-running the whole roster under:
   *
   *   1. `invariance` — shuffle-partition counts 5 and 97 (vs the
-  *      baseline 16) with AQE toggled off/on. Catches ordering- and
-  *      partition-count-dependent results (un-tiebroken limits,
-  *      float summation order leaking into output, partition-id maths).
+  *      session's, 32 by default) with AQE toggled off/on. Catches
+  *      ordering- and partition-count-dependent results (un-tiebroken
+  *      limits, float summation order leaking into output,
+  *      partition-id maths).
   *   2. `retry` — a [[Chaos.KillListener]] kill-and-reschedules the
   *      first attempt of every 3rd task of every stage (public
   *      `killTaskAttempt`; TaskKilled never counts toward
@@ -30,12 +31,13 @@ import org.apache.spark.sql.functions.col
   *   3. `speculation` — the full roster under
   *      `local-cluster[4,8,4096]` (the r13 multi-JVM gate topology)
   *      with speculation forced (quantile 0, multiplier 1, efficiency
-  *      gate off). IMPORTANT single-host limit, measured via
-  *      [[R14SpecProbe]]: the scheduler MARKS stragglers speculatable
-  *      (SparkListenerSpeculativeTaskSubmitted observed), but a
-  *      speculative COPY may only launch on a host with no running
-  *      attempt of that task (TaskSetManager.dequeueSpeculativeTask's
-  *      one-attempt-per-host rule) — and every local-cluster executor
+  *      gate off). IMPORTANT single-host limit, measured in SCALING.md
+  *      ("r14: redundant-execution determinism"): the scheduler MARKS
+  *      stragglers speculatable (SparkListenerSpeculativeTaskSubmitted
+  *      observed), but a speculative COPY may only launch on a host
+  *      with no running attempt of that task
+  *      (TaskSetManager.dequeueSpeculativeTask's one-attempt-per-host
+  *      rule) — and every local-cluster executor
   *      shares localhost, so launches are structurally impossible on
   *      one machine. The pass criterion is therefore marked > 0
   *      (scheduler engaged + roster content unchanged while it was
@@ -121,44 +123,18 @@ object R14Determinism {
     out
   }
 
-  private def localSession(): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-determinism")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // forced-spill drill (r15 judge ask #1): same knob as Verify, so
-    // the redundant-execution sweep can run with execution memory
-    // starved enough that the spill paths genuinely execute
-    sys.env.get("SPARK_GRAFT_MEMORY_FRACTION")
-      .foreach(f => b.config("spark.memory.fraction", f))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  private def speculationSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local-cluster[4,8,4096]")
-      .appName("graft-determinism-spec")
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "20ms")
-      .config("spark.speculation.multiplier", "1.0")
-      .config("spark.speculation.quantile", "0.0")
-      .config("spark.speculation.minTaskRuntime", "0ms")
-      .config("spark.speculation.efficiency.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Forced speculation under real executor JVMs: quantile 0 and
+    * multiplier 1 mark every task past the median as a straggler; the
+    * efficiency gate would otherwise speculate only tasks its metrics
+    * judge inefficient. */
+  private val speculationConf = Map(
+    "spark.master" -> "local-cluster[4,8,4096]",
+    "spark.speculation" -> "true",
+    "spark.speculation.interval" -> "20ms",
+    "spark.speculation.multiplier" -> "1.0",
+    "spark.speculation.quantile" -> "0.0",
+    "spark.speculation.minTaskRuntime" -> "0ms",
+    "spark.speculation.efficiency.enabled" -> "false")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -189,7 +165,9 @@ object R14Determinism {
     val walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
     // ---- session 1: baseline + runtime-conf sweeps + kill drill ----
-    val s1 = localSession()
+    val s1 = GraftSession("graft-determinism")
+    val basePartitions = s1.conf.get("spark.sql.shuffle.partitions")
+    val baseKey = s"baseline_p${basePartitions}_aqe"
     def t0 = System.nanoTime()
     var t = t0
     def lap(tag: String, key: String = ""): Unit = {
@@ -199,8 +177,8 @@ object R14Determinism {
       if (key.nonEmpty) walls(key) = math.round(sec * 10) / 10.0
       t = now
     }
-    configs("baseline_p16_aqe") = runRoster(s1, sfDir, roster)
-    lap("baseline_p16_aqe", "baseline_p16_aqe")
+    configs(baseKey) = runRoster(s1, sfDir, roster)
+    lap(baseKey, baseKey)
     if (modes("invariance")) {
       s1.conf.set("spark.sql.shuffle.partitions", "5")
       s1.conf.set("spark.sql.adaptive.enabled", "false")
@@ -210,7 +188,7 @@ object R14Determinism {
       s1.conf.set("spark.sql.adaptive.enabled", "true")
       configs("p97_aqe") = runRoster(s1, sfDir, roster)
       lap("p97_aqe", "p97_aqe")
-      s1.conf.set("spark.sql.shuffle.partitions", "16")
+      s1.conf.set("spark.sql.shuffle.partitions", basePartitions)
     }
     if (modes("retry")) {
       val (res, req, landed) =
@@ -225,7 +203,7 @@ object R14Determinism {
 
     // ---- session 2: forced speculation under real executor JVMs ----
     if (modes("speculation")) {
-      val s2 = speculationSession()
+      val s2 = GraftSession("graft-determinism-spec", speculationConf)
       s2.sparkContext.addSparkListener(new SparkListener {
         override def onTaskStart(e: SparkListenerTaskStart): Unit =
           if (e.taskInfo.speculative) speculativeLaunched.incrementAndGet()
@@ -259,7 +237,7 @@ object R14Determinism {
     }
 
     // ---- compare everything to the baseline ----
-    val base = configs("baseline_p16_aqe")
+    val base = configs(baseKey)
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val diverged = configs.toSeq.drop(1).map { case (cfg, m) =>
       val bad = roster.filter(n => m(n) != base(n))

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -37,7 +37,7 @@ import graft.streaming.StreamIngest
   *
   * Output: JSONL per-batch metrics to `outDir/soak_batches.jsonl`,
   * samples to `outDir/soak_samples.jsonl`, ONE summary JSON line on
-  * stdout (and to SPARK_GRAFT_AB_OUT if set) with the leak verdicts.
+  * stdout (and to SPARK_GRAFT_SOAK_OUT if set) with the leak verdicts.
   *
   * `runMain graft.R14Soak [target] [outDir]` — 500 batches by
   * default, ~10-20 min wall. Dev tool — not part of the library
@@ -48,15 +48,7 @@ object R14Soak {
     val target = if (args.length > 0) args(0).toInt else 500
     val outRoot = if (args.length > 1) args(1)
       else Files.createTempDirectory("graft_soak").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_SOAK_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-soak")
     import spark.implicits._
 
     def dir(name: String): String = {
@@ -274,7 +266,7 @@ object R14Soak {
       s""""ivf":${fmt(quintileGrowth("soak_ivf", "offset_ms"))}},""" +
       s""""out":"$outRoot"}""")
     println(line)
-    sys.env.get("SPARK_GRAFT_AB_OUT").foreach { p =>
+    sys.env.get("SPARK_GRAFT_SOAK_OUT").foreach { p =>
       Files.writeString(Paths.get(p), line + "\n")
     }
     spark.stop()

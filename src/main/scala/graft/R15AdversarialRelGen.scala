@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.types._
 
 /** Adversarial RELATIONAL rung generator (r14 judge ask #6): hostile
@@ -75,13 +75,7 @@ object R15AdversarialRelGen {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-advrel"
     val empty = args.length > 1 && args(1) == "empty"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-adversarial-rel-gen")
 
     // companion tables the relational subset never reads, byte-copied
     // so compare.py's CREATE VIEW of all ten tables resolves

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.operators.{Ann, Cdc}
@@ -58,14 +58,7 @@ object R15IndexSoak {
     val dim = if (args.length > 1) args(1).toInt else 16
     val nlist = 8
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-index-soak")
 
     def vec(i: Long): Array[Float] =
       Array.tabulate(dim)(j => (((i * 1103515245L + j * 12345L) % 2048L)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for benchmark data beyond the driver-provided
@@ -78,14 +78,7 @@ object ScaleUp {
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-scale-up")
 
     def scaled(name: String, keyCols: Seq[String],
                transform: (DataFrame, Int) => DataFrame = (df, _) => df,

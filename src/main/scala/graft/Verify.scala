@@ -1,73 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // master override (r13 judge ask #2): local[N] is ONE JVM, so
-    // executor-side serialization (broadcast rehydration, kernel
-    // closures, task-result transport) is structurally unobserved.
     // SPARK_GRAFT_MASTER=local-cluster[4,8,4096] runs the identical
-    // gate across real executor JVMs on one machine — the cheapest
-    // probe for the failure class a 1000-executor deploy hits on day
-    // one. Executor JVMs need the repo classes on their classpath
-    // (the driver's -cp is not inherited), hence extraClassPath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // forced-spill rung (r15 judge ask #1): a 1000-executor deployment
-    // lives in spill, but every gate run to date recorded total_spill
-    // 0 — the oracle apparatus had never validated a result computed
-    // THROUGH the SortMergeJoin/hash-agg/window spill paths. Starving
-    // spark.memory.fraction (with a small heap via SPARK_DRIVER_MEM)
-    // makes those paths execute for real; tools/spillverify.sh runs
-    // the full gate this way and requires per-family spill > 0.
-    sys.env.get("SPARK_GRAFT_MEMORY_FRACTION")
-      .foreach { f =>
-        builder.config("spark.memory.fraction", f)
-        // The starved rung runs real executor JVMs at deployment-sized
-        // heaps, so an UNMANAGED-heap-hungry task can kill its executor
-        // (observed: exit 52 = executor OOM during agg_approx's exact
-        // countDistinct partials). That is the rung's point — but with
-        // all retries on one host, default scheduling re-offered the
-        // task to the dying executor 4 times ("rejected from
-        // ThreadPoolExecutor[Shutting down]") and aborted the job
-        // before the standalone worker relaunched it. Match what a real
-        // cluster does: more attempts + executor-level exclusion after
-        // a failure, with NODE-level exclusion effectively off (every
-        // executor here shares localhost — excluding the node would
-        // strand the app, the opposite of a 1000-node deployment).
-        builder.config("spark.task.maxFailures", "8")
-        builder.config("spark.excludeOnFailure.enabled", "true")
-        builder.config("spark.excludeOnFailure.stage.maxFailedTasksPerNode", "1000000")
-        builder.config("spark.excludeOnFailure.application.maxFailedExecutorsPerNode", "1000000")
-        // The starved rung's ONLY observed OOM was not the data and not
-        // the managed pool — it was the spill MERGE: every spill file's
-        // UnsafeSorterSpillReader allocates an unmanaged 1 MiB buffer
-        // plus two read-ahead buffers (stack: UnsafeSorterSpillReader
-        // .<init> ← UnsafeExternalSorter.getSortedIterator), so a task
-        // that was starved into N spill files pays ~3N MiB of HEAP at
-        // merge time — the starvation knob itself manufactures the
-        // unmanaged allocation that kills the executor. Shrink the
-        // per-file reader cost the way a spill-heavy production cluster
-        // does: disable read-ahead (2 extra buffers per file; the
-        // reader buffer itself is floor-capped at 1 MiB by Spark's
-        // config validation, so read-ahead is the whole lever).
-        builder.config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-      }
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // gate across real executor JVMs (local[N] is one JVM, so
+    // executor-side serialization is unobserved there), and
+    // SPARK_GRAFT_MEMORY_FRACTION runs it as the forced-spill rung —
+    // both handled by GraftSession.
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional subset (comma-separated names, same contract as Bench):
     // iterating on ONE oracle shouldn't re-dump all ~150, and the

@@ -514,9 +514,9 @@ object SourceQueries {
 
   /** The mm_phash_dedup corpus: one deterministic 16-px PNG per
     * document plus a brightness-scaled re-encode (different bytes,
-    * dHash-adjacent) for every 5th doc. Shared with
-    * [[graft.StarAb]] so the pair/star A/B measures the exact corpus
-    * the shipped query runs on.
+    * dHash-adjacent) for every 5th doc. The pair/star A/B in SCALING.md
+    * ("Pair-list vs star-edge output form", r9) measured this exact
+    * corpus.
     *
     * The PNG encode/decode chain is CPU-bound row-local work:
     * repartition the SKINNY (id, text) frame to cluster parallelism
@@ -548,8 +548,9 @@ object SourceQueries {
 
   /** The mm_audio_dedup corpus: one deterministic mono 16-bit WAV per
     * document plus a gain-scaled re-encode (different bytes,
-    * eHash-adjacent) for every 5th doc. Shared with [[graft.StarAb]];
-    * same skinny-repartition note as [[imageDedupPayloads]].
+    * eHash-adjacent) for every 5th doc; the same SCALING.md r9 pair/star
+    * A/B measured it. Same skinny-repartition note as
+    * [[imageDedupPayloads]].
     */
   def audioDedupPayloads(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -48,8 +48,7 @@ class ClusterFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "12")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
+      .config("spark.executor.extraClassPath", GraftSession.classesDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {

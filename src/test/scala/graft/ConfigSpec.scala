@@ -166,4 +166,60 @@ class ConfigSpec extends SparkSpec {
     val (okLax, rejectsLax) = Sources.fileGate(spark, dir.toString, lax)
     assert(rejectsLax.isEmpty && okLax.size == 4)
   }
+
+  test("GraftSession: an empty env gives local[nproc], 32 partitions, UTC, UI off") {
+    val s = GraftSession.settings(Map.empty)
+    assert(s("spark.master") ==
+      s"local[${Runtime.getRuntime.availableProcessors}]")
+    assert(s("spark.sql.shuffle.partitions") == "32")
+    assert(s("spark.sql.session.timeZone") == "UTC")
+    assert(s("spark.ui.enabled") == "false")
+    assert(s("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(!s.contains("spark.executor.extraClassPath"),
+      "a local master needs no executor classpath")
+    val env = GraftSession.settings(Map("SPARK_GRAFT_CPUS" -> "3",
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "7"))
+    assert(env("spark.master") == "local[3]")
+    assert(env("spark.sql.shuffle.partitions") == "7")
+    assert(GraftSession.settings(Map("SPARK_GRAFT_CPUS" -> "3",
+      "SPARK_GRAFT_MASTER" -> "local[2,4]"))("spark.master") == "local[2,4]")
+  }
+
+  test("GraftSession: a local-cluster master ships graft's classes to executors") {
+    for (settings <- Seq(
+        GraftSession.settings(Map("SPARK_GRAFT_MASTER" -> "local-cluster[2,1,1024]")),
+        GraftSession.settings(Map.empty,
+          Map("spark.master" -> "local-cluster[4,8,4096]")))) {
+      val cp = java.nio.file.Paths.get(settings("spark.executor.extraClassPath"))
+      assert(java.nio.file.Files.isDirectory(cp), cp)
+      assert(java.nio.file.Files.isRegularFile(cp.resolve("graft/SparkEntry.class")),
+        s"$cp lacks graft/SparkEntry.class")
+    }
+  }
+
+  test("GraftSession: spill-rung keys appear only with SPARK_GRAFT_MEMORY_FRACTION") {
+    val spillKeys = GraftSession.spillRung("0.5").keySet
+    assert(spillKeys.contains("spark.memory.fraction"))
+    assert(GraftSession.settings(Map.empty).keySet.intersect(spillKeys).isEmpty)
+    val starved = GraftSession.settings(Map("SPARK_GRAFT_MEMORY_FRACTION" -> "0.12"))
+    assert(starved("spark.memory.fraction") == "0.12")
+    assert(spillKeys.subsetOf(starved.keySet))
+    assert(starved("spark.unsafe.sorter.spill.read.ahead.enabled") == "false")
+  }
+
+  test("GraftSession: caller conf wins over env and defaults") {
+    val env = Map("SPARK_GRAFT_MASTER" -> "local[2]",
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "7",
+      "SPARK_GRAFT_MEMORY_FRACTION" -> "0.12")
+    val s = GraftSession.settings(env, Map(
+      "spark.master" -> "local[1]",
+      "spark.sql.shuffle.partitions" -> "5",
+      "spark.memory.fraction" -> "0.3",
+      "spark.scheduler.mode" -> "FAIR"))
+    assert(s("spark.master") == "local[1]")
+    assert(s("spark.sql.shuffle.partitions") == "5")
+    assert(s("spark.memory.fraction") == "0.3")
+    assert(s("spark.scheduler.mode") == "FAIR")
+    assert(s("spark.sql.session.timeZone") == "UTC")
+  }
 }

@@ -8,7 +8,7 @@
 # no global () row — is closed in r16 by the two-level empty-safe plan;
 # see PLANS.md "empty-safe two-level refresh").
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 REL="q1_agg q6_filter_agg q3_topn q5_multijoin join_semi join_anti join_outer \
 window_rank window_running window_ntile agg_rollup agg_cube agg_distinct \
 agg_percentile agg_histogram agg_approx pivot_wide unpivot_long union_dedup \
@@ -19,13 +19,13 @@ agg_grouping_sets window_range_frame q2_min_cost_supp q7_volume \
 q8_market_share q9_profit q10_returns q11_share_threshold q13_order_dist \
 q14_promo_share q15_top_supplier q16_supplier_count q20_qty_surplus q12_shipmode"
 export SPARK_GRAFT_VERIFY_QUERIES=$(echo $REL | tr ' ' ',')
-tools/runmain.sh graft.R15AdversarialRelGen /root/repo/testdata-advrel 2>/dev/null | tail -1
-tools/runmain.sh graft.R15AdversarialRelGen /root/repo/testdata-advrel-empty empty 2>/dev/null | tail -1
+tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel 2>/dev/null | tail -1
+tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel-empty empty 2>/dev/null | tail -1
 echo "== hostile rung =="
-SPARK_GRAFT_CPUS=8 tools/runmain.sh graft.Verify /root/repo/testdata-advrel /tmp/advrel_out \
+tools/runmain.sh graft.Verify testdata-advrel /tmp/advrel_out \
   2>&1 | grep -E "\[verify\].*failed" || true
-python3 tools/compare.py /root/repo/testdata-advrel /tmp/advrel_out $REL | grep -E "^FAIL|== "
+python3 tools/compare.py testdata-advrel /tmp/advrel_out $REL | grep -E "^FAIL|== "
 echo "== empty-facts rung =="
-SPARK_GRAFT_CPUS=8 tools/runmain.sh graft.Verify /root/repo/testdata-advrel-empty /tmp/advrel_empty_out \
+tools/runmain.sh graft.Verify testdata-advrel-empty /tmp/advrel_empty_out \
   2>&1 | grep -E "\[verify\].*failed" || true
-python3 tools/compare.py /root/repo/testdata-advrel-empty /tmp/advrel_empty_out $REL | grep -E "^FAIL|== "
+python3 tools/compare.py testdata-advrel-empty /tmp/advrel_empty_out $REL | grep -E "^FAIL|== "

@@ -14,7 +14,7 @@ if [ "$1" = "--determinism" ]; then
   shift
   SF=${1:-/root/testdata/sf0.01}
   shift || true
-  cd /root/repo
+  cd "$(dirname "$0")/.."
   if [ $# -gt 0 ]; then
     export SPARK_GRAFT_VERIFY_QUERIES=$(IFS=,; echo "$*")
   fi
@@ -25,12 +25,12 @@ SF=${1:-/root/testdata/sf0.01}
 shift || true
 OUT=/tmp/verify_out
 rm -rf "$OUT"
-cd /root/repo
+cd "$(dirname "$0")/.."
 if [ $# -gt 0 ]; then
   SUBSET=$(IFS=,; echo "$*")
   export SPARK_GRAFT_VERIFY_QUERIES="$SUBSET"
 fi
-SPARK_GRAFT_CPUS=8 sbt "runMain graft.Verify $SF $OUT" 2>&1 | grep -E "\[verify\]|error|Exception" || true
+sbt "runMain graft.Verify $SF $OUT" 2>&1 | grep -E "\[verify\]|error|Exception" || true
 python3 tools/compare.py "$SF" "$OUT" "$@"
 # plan-fingerprint gate (r12; r13 made it PER-RUNG): static-plan
 # drift fails loudly. Broadcast decisions legitimately differ across

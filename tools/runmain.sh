@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main without sbt (no build-lock contention): uses the
-# classes sbt already compiled plus the Spark jars.
+# classes sbt already compiled (in the checkout this script lives in)
+# plus the Spark jars.
 # Usage: tools/runmain.sh graft.Bench [args...]
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 CLS=$1; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -19,4 +21,4 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-16g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"

@@ -31,12 +31,12 @@
 # Expect: crossrung summary "== 162 pass, 0 fail ..." and the
 # spill-family summary listing nonzero disk spill for join/agg/window.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/verify_spill_sf10}
 rm -rf "$OUT"
 SPARK_GRAFT_MEMORY_FRACTION=0.12 SPARK_DRIVER_MEM=8g \
   SPARK_GRAFT_MASTER='local-cluster[4,8,4096]' \
-  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=8 \
+  SPARK_GRAFT_SHUFFLE_PARTITIONS=8 \
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   tools/runmain.sh graft.Verify /root/repo/testdata-sf10 "$OUT" \
   2>&1 | grep -E "\[verify\].*failed" || true
