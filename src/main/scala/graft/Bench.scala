@@ -1,306 +1,129 @@
 package graft
+
+import java.io.File
+
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.{ObjectMapper, PropertyNamingStrategies}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** graft's per-query timer: one closed loop over a roster of queries on
+  * one session, timing each query's fully materialized result (the
+  * `noop` sink; `.count()` would let Catalyst prune computed columns).
+  * Pass-major, like perfbench: one cold pass in roster order, then
+  * [[SteadyPasses]] steady passes. Each execution times the query
+  * function (build: its eager driver-side phase) and the noop write
+  * separately, and ends with `catalog.clearCache()`, so no execution
+  * reads an earlier one's persisted blocks. Steady executions also take
+  * [[BenchMetricsListener]] deltas, barriers outside the timed window.
+  *
+  * `tools/runmain.sh graft.Bench <sfDir> <out.json> [query ...]`; no
+  * queries means all of `SparkEntry.queries`. The record goes to
+  * `out.json` only when no query failed and the run was quiet
+  * (`total <= NoiseBound * min_sum`); otherwise the file is left as it
+  * was, each failure goes to stderr and the exit code is 1. stdout gets
+  * one summary line either way.
+  */
 object Bench {
-  /** One query's round record: steady median / cold / min wall, the
-    * normalized static-plan fingerprint, and the steady-pass movement
-    * metrics (shuffle bytes, spill, peak task memory).
-    */
-  final case class QueryResult(median: Double, cold: Double, minT: Double,
-                               planHash: String,
-                               m: BenchMetricsListener.Snapshot)
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession("graft-bench")
-    // steady-state timing: one untimed pass per query absorbs
-    // codegen/JIT compilation, then the MEDIAN of three timed passes
-    // is reported — single-run totals swing ±20% (JIT/GC in one JVM)
-    // and were polluting round-over-round comparison. A query that
-    // throws is reported as -1 and kept OUT of the total (its
-    // time-to-crash is not an execution time).
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    require(iters >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
-    // optional subset (comma-separated names) for scaling-ladder side
-    // runs; the per-round driver run leaves this unset = all queries
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach { qs =>
-      val unknown = qs -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown bench queries: ${unknown.mkString(", ")}")
-    }
-    val selected = subset.fold(SparkEntry.queries)(qs =>
-      SparkEntry.queries.view.filterKeys(qs).toMap)
-    // per-query execution accounting (r12 judge ask #1): shuffle
-    // bytes, spill, and peak task memory are what a CLUSTER pays —
-    // the local wall time the ladder fits conflates them with JVM
-    // effects. Deltas are captured around ONE steady pass (the last
-    // successful timed pass) behind delivery barriers, so fixture
-    // builds and cache population in the cold pass don't pollute the
-    // steady-state movement number.
+  type Query = (SparkSession, String) => DataFrame
+
+  val SteadyPasses = 3
+  /** Steady total over the sum of per-query minima past which the run
+    * was measured in a noisy window and is not worth keeping. */
+  val NoiseBound = 1.15
+
+  final case class QueryRecord(coldS: Option[Double], buildS: Option[Double],
+      medianS: Option[Double], minS: Option[Double], shuffleRead: Long,
+      shuffleWrite: Long, spillMem: Long, spillDisk: Long, peakTaskMem: Long,
+      error: Option[String])
+  final case class Stamp(master: String, defaultParallelism: Int,
+      driverMaxHeapMb: Long, shufflePartitions: Int, sparkVersion: String,
+      jdk: String, sfDir: String, steadyPasses: Int, roster: Seq[String])
+  final case class Record(total: Double, totalCold: Double, minSum: Double,
+      failed: Int, nQueries: Int, stamp: Stamp,
+      queries: ListMap[String, QueryRecord]) {
+    def noisy: Boolean = total > NoiseBound * minSum
+  }
+
+  private final case class Exec(buildS: Double, totalS: Double,
+      error: Option[String], delta: Option[BenchMetricsListener.Snapshot])
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+
+  def measure(spark: SparkSession, sfDir: String,
+              roster: Seq[(String, Query)]): Record = {
+    import BenchMetricsListener.{barrier, snapshot, Snapshot}
     val metrics = new BenchMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    def mSnap(): BenchMetricsListener.Snapshot = {
-      BenchMetricsListener.barrier(spark, metrics)
-      BenchMetricsListener.snapshot(metrics)
-    }
-    val results = selected.map { case (name, fn) =>
-      // the warm-up pass is TIMED and published as the COLD number
-      // (r10 judge ask #6): first-iteration cost — codegen/JIT, cache
-      // population, fixture builds — was previously invisible to
-      // cross-round regression checks because only the steady median
-      // was round-stamped. It stays excluded from the steady median.
-      val tc = System.nanoTime()
-      val coldDf = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
-      val coldOk = try { coldDf.foreach(_.count()); coldDf.isDefined }
-                   catch { case _: Throwable => false }
-      val cold = if (coldOk) (System.nanoTime() - tc) / 1e9 else -1.0
-      // normalized static-plan fingerprint (r12 judge ask #2) — the
-      // automated form of the hand plan canaries; computed on the
-      // cold pass's frame, stable across passes by construction
-      val pHash = coldDf.map { df =>
-        try PlanHash.fingerprint(df) catch { case _: Throwable => "err" }
-      }.getOrElse("err")
-      var lastDelta: Option[BenchMetricsListener.Snapshot] = None
-      def timed(): Double = {
-        val before = mSnap()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        if (ok) lastDelta = Some(mSnap().minus(before))
-        dt
-      }
-      var times = (1 to iters).map(_ => timed())
-      // noise guard (r11 judge ask #2): the r10 round-stamped
-      // artifact carried join_anti 6.3x / src_xls 5.5x swings with
-      // UNCHANGED plans — one noisy window (shared-JVM GC, driver-box
-      // contention) polluting all 3 passes of a 0.4 s query. When the
-      // 3-pass spread exceeds 1.5x, take 2 extra passes so the median
-      // of 5 rides out a transient; queries_min is published so a
-      // median-vs-min gap flags residual noise in the artifact itself.
-      // a FAILED extra pass is dropped, not folded in: the original
-      // passes all succeeded, so a transient in the noise-guard rerun
-      // must not convert three valid measurements into failed = -1
-      if (iters >= 3 && !times.contains(-1.0) &&
-          times.max > 1.5 * times.min)
-        times = times ++ (1 to 2).map(_ => timed()).filter(_ >= 0)
-      val median =
-        if (times.contains(-1.0)) -1.0
-        else times.sorted.apply(times.length / 2)
-      val minT = if (times.contains(-1.0)) -1.0 else times.min
-      // drop this query's persisted frames before the next query
-      // starts: operators persist() intermediates and leave them to
-      // LRU, so without this a long bench run accumulates caches and
-      // LATER queries pay eviction/spill for EARLIER queries' frames
-      // (r6 ladder: dedup_minhash 38.5s inside the full run vs 18.6s
-      // isolated at sf10). Within-query iterations still share. The
-      // explicit GC keeps one query's garbage from billing the next
-      // query's passes (part of the same r11 noise-isolation ask).
+    val sc = spark.sparkContext
+    def snap() = { barrier(spark, metrics); snapshot(metrics) }
+    def exec(fn: Query, steady: Boolean): Exec = {
+      val before = if (steady) Some(snap()) else None
+      val t0 = System.nanoTime()
+      var t1 = t0
+      val error = try {
+        val df = fn(spark, sfDir)
+        t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        None
+      } catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+      val t2 = System.nanoTime()
       spark.catalog.clearCache()
-      System.gc()
-      val d = lastDelta.getOrElse(
-        BenchMetricsListener.Snapshot(-1, -1, -1, -1, -1))
-      name -> QueryResult(median, cold, minT, pHash, d)
+      Exec((t1 - t0) / 1e9, (t2 - t0) / 1e9, error, before.map(snap().minus(_)))
     }
-    // stress tier (r11 judge ask #10): the two DECLARED-quadratic
-    // exact pair-kernel baselines are 22% of sf100 suite wall by
-    // design; totals are split so the aggregate scaling ratio tracks
-    // the scale-relevant operators while the stress pair stays
-    // measured and visible.
-    val stressTier = Set("dedup_embedding", "dedup_embedding_lsh")
-    // exclusive-mode control runs (r13 judge ask #6): the documented
-    // noise-sensitive queries measured up to 2x their isolated wall
-    // INSIDE the suite with unchanged plans/shuffle bytes (q4_exists
-    // 6.4 s in-suite vs 4.4 s exclusive at sf100, r13) — shared-JVM
-    // neighbor effects (JIT state, heap fragmentation), not plan
-    // regressions. A full-suite run re-times each flagged query in a
-    // FRESH JVM (same classpath/heap, subset env) after the suite and
-    // publishes both numbers, so ladder fits can read the exclusive
-    // figure and a widening in-suite gap flags interference loudly
-    // instead of polluting round-over-round comparison.
-    val noiseSensitive = Seq("q4_exists", "join_anti", "src_xls")
-    val exclusive: Map[String, Double] =
-      if (subset.nonEmpty || iters < 3 ||
-          sys.env.get("SPARK_GRAFT_EXCLUSIVE").contains("0")) Map.empty
-      else {
-        val jvmArgs = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments
-        val javaBin = java.nio.file.Paths
-          .get(System.getProperty("java.home"), "bin", "java").toString
-        noiseSensitive.filter(results.contains).flatMap { q =>
-          val out = s"/tmp/graft_exclusive_$q.json"
-          try {
-            val cmd = new java.util.ArrayList[String]()
-            cmd.add(javaBin)
-            jvmArgs.forEach(a => cmd.add(a))
-            cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-            cmd.add("graft.Bench")
-            val pb = new ProcessBuilder(cmd)
-            pb.environment().put("SPARK_GRAFT_BENCH_QUERIES", q)
-            pb.environment().put("SPARK_GRAFT_BENCH_OUT", out)
-            pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-            pb.environment().put("SPARK_GRAFT_BENCH_ITERS", "3")
-            pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-            pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-            val rc = pb.start().waitFor()
-            val re = ("\"queries\":\\{\"" + q + "\":([-0-9.eE]+)").r
-            val parsed = if (rc == 0)
-              re.findFirstMatchIn(java.nio.file.Files.readString(
-                java.nio.file.Paths.get(out))).map(_.group(1).toDouble)
-            else None
-            parsed.filter(_ >= 0).map(q -> _).orElse {
-              System.err.println(s"[bench] exclusive rerun of $q failed (rc=$rc)")
-              None
-            }
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] exclusive rerun of $q: ${e.getMessage}")
-              None
-          }
-        }.toMap
-      }
-    exclusive.foreach { case (q, ex) =>
-      val in = results(q).median
-      if (ex > 0 && in > 1.15 * ex)
-        System.err.println(
-          f"[bench] INTERFERENCE: $q in-suite $in%.2f s > 1.15x exclusive $ex%.2f s")
+    sc.addSparkListener(metrics)
+    val passes = try (0 to SteadyPasses).map(p => roster.map(q => exec(q._2, p > 0)))
+      finally sc.removeSparkListener(metrics)
+    val queries = ListMap(roster.indices.map { i =>
+      val cold = passes.head(i)
+      val steady = passes.tail.map(_(i))
+      val error = (cold +: steady).flatMap(_.error).headOption
+      def ok(x: => Double) = if (error.isEmpty) Some(r3(x)) else None
+      val d = steady.filter(_.error.isEmpty).flatMap(_.delta).lastOption
+        .getOrElse(Snapshot(-1, -1, -1, -1, -1))
+      roster(i)._1 -> QueryRecord(ok(cold.totalS), ok(median(steady.map(_.buildS))),
+        ok(median(steady.map(_.totalS))), ok(steady.map(_.totalS).min),
+        d.shuffleRead, d.shuffleWrite, d.memSpill, d.diskSpill, d.peakTaskMem, error)
+    }: _*)
+    def sum(f: QueryRecord => Option[Double]) = r3(queries.values.flatMap(f).sum)
+    Record(sum(_.medianS), sum(_.coldS), sum(_.minS),
+      queries.values.count(_.error.isDefined), queries.size,
+      Stamp(sc.master, sc.defaultParallelism, Runtime.getRuntime.maxMemory >> 20,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt, spark.version,
+        System.getProperty("java.version"), sfDir, SteadyPasses, queries.keys.toSeq),
+      queries)
+  }
+
+  /** Writes `record` to `out` only when the run is clean (no failure,
+    * not noisy), prints the summary line, and returns whether it wrote. */
+  def publish(record: Record, out: String): Boolean = {
+    val clean = record.failed == 0 && !record.noisy
+    if (clean) mapper.writerWithDefaultPrettyPrinter().writeValue(new File(out), record)
+    else {
+      for ((q, r) <- record.queries; e <- r.error) System.err.println(s"[bench] $q failed: $e")
+      if (record.noisy) System.err.println(s"[bench] noisy: total ${record.total} s > $NoiseBound x min_sum")
+      System.err.println(s"[bench] $out not written")
     }
-    def numMap(f: QueryResult => Double): String =
-      results.map { case (k, r) => s"\"" + k + "\":" + f(r) }
-        .mkString("{", ",", "}")
-    def longMap(f: QueryResult => Long): String =
-      results.map { case (k, r) => s"\"" + k + "\":" + f(r) }
-        .mkString("{", ",", "}")
-    val qs = numMap(_.median)
-    val qsCold = numMap(_.cold)
-    val qsMin = numMap(_.minT)
-    val qsHash = results.map { case (k, r) => s"\"" + k + "\":\"" + r.planHash + "\"" }
-      .mkString("{", ",", "}")
-    val qsShufR = longMap(_.m.shuffleRead)
-    val qsShufW = longMap(_.m.shuffleWrite)
-    val qsSpillM = longMap(_.m.memSpill)
-    val qsSpillD = longMap(_.m.diskSpill)
-    val qsPeak = longMap(_.m.peakTaskMem)
-    val total = results.values.map(_.median).filter(_ >= 0).sum
-    val totalCold = results.values.map(_.cold).filter(_ >= 0).sum
-    val totalStress = results.collect {
-      case (k, r) if stressTier(k) && r.median >= 0 => r.median }.sum
-    val totalCore = total - totalStress
-    val totalShufR = results.values.map(_.m.shuffleRead).filter(_ >= 0).sum
-    val totalShufW = results.values.map(_.m.shuffleWrite).filter(_ >= 0).sum
-    val totalSpill = results.values
-      .map(r => math.max(r.m.memSpill, 0L) + math.max(r.m.diskSpill, 0L)).sum
-    val nFailed = results.values.count(_.median < 0)
-    val qsExcl = exclusive.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // noise fields IN the artifact (r15 judge ask #4): min_sum is the
-    // same-run sum of per-query minima (the host-interference-free
-    // floor), noisy is the >15% median-vs-min gap that disqualifies a
-    // run from becoming the canonical snapshot, and canonical_total is
-    // the COMMITTED snapshot's total — so BENCH_rN.json alone carries
-    // enough to tell a phantom regression (noisy window) from a real
-    // one (this round's 178.3-vs-96.7 confusion, r15 verdict).
-    val totalMin = results.values.map(_.minT).filter(_ >= 0).sum
-    val noisy = totalMin > 0 && total > 1.15 * totalMin
-    val canonicalTotal: String =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/root/repo/BENCH_QUERIES.json")), "UTF-8")
-        "\"metric\":\"total\",\"value\":([0-9.]+)".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("null")
-      } catch { case _: java.io.IOException => "null" }
-    def r3(v: Double): String = f"$v%.3f"
-    val noiseFields = s""""min_sum":${r3(totalMin)},"noisy":$noisy,"canonical_total":$canonicalTotal"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_exclusive":$qsExcl,"queries_cold":$qsCold,"queries_min":$qsMin,"plan_hash":$qsHash,"queries_shuffle_read":$qsShufR,"queries_shuffle_write":$qsShufW,"queries_spill_mem":$qsSpillM,"queries_spill_disk":$qsSpillD,"queries_peak_task_mem":$qsPeak,"total_shuffle_read":$totalShufR,"total_shuffle_write":$totalShufW,"total_spill":$totalSpill,"total_cold":$totalCold,"total_core":$totalCore,"total_stress":$totalStress,"stress_tier":[${stressTier.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],$noiseFields,"failed":$nFailed,"sf":"$sfDir"}"""
-    println(line)
-    // The driver's artifact capture keeps only a ~3 KB stdout TAIL and
-    // parses the last JSON line it can find in it. The full record
-    // above is ~10 KB at 155 queries, so the tail started mid-line and
-    // BENCH_rN.json's `parsed` came out null (r12 judge "what's wrong"
-    // #2 / ask #8). Emit a COMPACT summary LAST — totals, failure
-    // count, and only the 20 slowest per-query medians (3 dp) — sized
-    // to fit the tail window whole together with sbt's closing line.
-    // The full per-query record still lives in the file written below;
-    // `queries_full` names it so the compact line is self-describing.
-    val top20 = results.toSeq
-      .filter(_._2.median >= 0).sortBy(-_._2.median).take(20)
-      .map { case (k, r) => s"\"" + k + f"\":${r.median}%.3f" }
-      .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$top20,"queries_exclusive":$qsExcl,"queries_full":"BENCH_QUERIES.json","n_queries":${results.size},"total_cold":${r3(totalCold)},"total_core":${r3(totalCore)},"total_stress":${r3(totalStress)},"total_shuffle_read":$totalShufR,"total_shuffle_write":$totalShufW,"total_spill":$totalSpill,$noiseFields,"failed":$nFailed,"sf":"$sfDir"}"""
-    println(compact)
-    // The driver's artifact capture tails stdout to ~2 KB, which
-    // clipped the per-query map to the last ~67 queries (judge,
-    // r4-r5). Persist the FULL line to a stable file so every
-    // timing survives each round; path overridable for side runs.
-    // SUBSET runs default elsewhere — a 4-query ladder probe must
-    // not clobber the committed full-suite artifact (it did, r10).
-    // Same for full-suite runs at a NON-driver scale dir: the sf10/
-    // sf100 ladder runs were silently overwriting the committed
-    // sf0.1 record (it did, twice, r11) — only a full run on the
-    // driver's own rung writes the canonical path. Pinned to the
-    // EXACT driver rung (r12 advisor finding): a prefix match on
-    // /root/testdata/ let a full run at sf0.001/sf0.01 clobber the
-    // committed sf0.1 record too.
-    // a local-cluster side run is NOT the canonical topology — its
-    // numbers price multi-JVM transport and must not replace the
-    // local[32] record the round-over-round comparison is built on.
-    // Neither is a lower-core run (the driver's own scaling rung runs
-    // this same binary at a smaller SPARK_GRAFT_CPUS — it stamped the
-    // canonical file with local[8] numbers, r16 session 2): the
-    // canonical record is pinned to the full local[32] topology.
-    val driverRung = sfDir == "/root/testdata/sf0.1" &&
-      spark.sparkContext.master == "local[32]"
-    // noise gate on the canonical snapshot (r13 ask #1): the r12
-    // committed record was captured in a window where the suite total
-    // ran 14% above the same-run queries_min sum — host interference,
-    // not plan change (hashes and shuffle bytes identical across four
-    // same-HEAD runs). The median-vs-min gap inside ONE run is the
-    // noise signal the artifact already carries; when it exceeds 15%
-    // the run does not deserve to become the canonical record, so it
-    // is diverted to /tmp and the previous committed snapshot stands.
-    if (noisy)
-      System.err.println(f"[bench] NOISY WINDOW: suite median total $total%.1f s > 1.15x min total $totalMin%.1f s - not overwriting the canonical snapshot")
-    // a run with FAILED queries is disqualified outright (r13 advisor:
-    // the old nFailed==0 guard on `noisy` meant a failing run skipped
-    // the noise gate and still overwrote the canonical snapshot)
-    if (nFailed > 0)
-      System.err.println(s"[bench] $nFailed FAILED queries - not overwriting the canonical snapshot")
-    // cross-run degraded-window gate (r16 session 3): the intra-run
-    // noisy gate above cannot see a window that is CONSISTENTLY slow
-    // (every pass inflated by the same host factor — the
-    // plans/r16/host_wakeup_latency.md signature), so such runs were
-    // silently replacing the committed snapshot (it happened twice
-    // this round: a local[8] run, then a 1.24x-window local[32] run —
-    // both restored from git). When this run's own noise-free floor
-    // (min_sum) sits more than 15% above the committed snapshot's,
-    // the slowdown is either ambient (identical plans/shuffle — the
-    // six committed degraded-window runs) or a real regression the
-    // round must investigate before re-stamping; either way it does
-    // not overwrite silently. A DELIBERATE re-stamp (accepted perf
-    // trade, changed roster) sets SPARK_GRAFT_FORCE_STAMP=1.
-    val committedMinSum: Option[Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/root/repo/BENCH_QUERIES.json")), "UTF-8")
-        "\"min_sum\":([0-9.]+)".r.findFirstMatchIn(txt).map(_.group(1).toDouble)
-      } catch { case _: java.io.IOException => None }
-    val degradedVsCommitted = driverRung &&
-      !sys.env.get("SPARK_GRAFT_FORCE_STAMP").contains("1") &&
-      committedMinSum.exists(c => c > 0 && totalMin > 1.15 * c)
-    if (degradedVsCommitted)
-      System.err.println(f"[bench] DEGRADED vs committed snapshot: this run's min_sum $totalMin%.1f s > 1.15x committed ${committedMinSum.get}%.1f s - not overwriting the canonical snapshot (ambient window or real regression; SPARK_GRAFT_FORCE_STAMP=1 to re-stamp deliberately)")
-    val disqualified = noisy || nFailed > 0 || degradedVsCommitted
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (subset.nonEmpty) "/tmp/BENCH_QUERIES_subset.json"
-      else if (driverRung && !disqualified) "/root/repo/BENCH_QUERIES.json"
-      else if (driverRung) "/tmp/BENCH_QUERIES_noisy.json"
-      else "/tmp/BENCH_QUERIES_" +
-        java.nio.file.Paths.get(sfDir).getFileName.toString + ".json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes("UTF-8"))
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
-    spark.stop()
+    println(mapper.writeValueAsString(ListMap("total" -> record.total,
+      "total_cold" -> record.totalCold, "min_sum" -> record.minSum,
+      "failed" -> record.failed, "n_queries" -> record.nQueries,
+      "noisy" -> record.noisy, "written" -> clean)))
+    clean
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: graft.Bench <sfDir> <out.json> [query ...]")
+    val all = SparkEntry.queries
+    val names = if (args.length > 2) args.drop(2).toSeq.distinct else all.keys.toSeq.sorted
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession("graft-bench")
+    val clean = try publish(measure(spark, args(0), names.map(n => n -> all(n))), args(1))
+      finally spark.stop()
+    if (!clean) sys.exit(1)
   }
 }

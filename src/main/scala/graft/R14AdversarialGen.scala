@@ -8,8 +8,8 @@ import org.apache.spark.sql.SaveMode
   * never reach — plus copies of the sf0.001 companion tables so the
   * full text/dedup gate subset runs against the dir unchanged:
   *
-  *   tools/runmain.sh graft.R14AdversarialGen /root/repo/testdata-adv
-  *   tools/localverify.sh /root/repo/testdata-adv <text/dedup subset>
+  *   tools/runmain.sh graft.R14AdversarialGen testdata-adv [bigDivisor]
+  *   tools/localverify.sh testdata-adv <text/dedup subset>
   *
   * Families (doc_id ranges; deterministic, no RNG):
   *  - 0-99     ASCII word-salad baseline (fixture shape parity)
@@ -206,7 +206,8 @@ object R14AdversarialGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = if (args.length > 0) args(0) else "/root/repo/testdata-adv"
+    require(args.nonEmpty, "usage: graft.R14AdversarialGen <outDir> [bigDivisor]")
+    val outDir = args(0)
     // second arg: big-doc divisor (e.g. 64 -> the oracle-feasible
     // `nobig` rung with ~16-64 KB docs of the same shapes)
     val bigScale = if (args.length > 1) args(1).toInt else 1

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import scala.collection.immutable.SortedMap
@@ -48,8 +47,8 @@ import scala.collection.immutable.SortedMap
   *
   * `tools/runmain.sh graft.R14Concurrent /root/testdata/sf0.01
   *    [threads] [dupN]` (defaults 8, 4; subset via
-  * SPARK_GRAFT_VERIFY_QUERIES). Writes CONCURRENCY_r14.json and
-  * prints the same JSON as the last line.
+  * SPARK_GRAFT_VERIFY_QUERIES). The JSON record is the last stdout
+  * line; the main writes no file.
   *
   * Dev/measurement harness — not part of the library surface.
   */
@@ -197,9 +196,6 @@ object R14Concurrent {
       s""""dup_diverged":${dupDiverged.map(q).mkString("[", ",", "]")},""" +
       s""""errors":${errors.map(q).mkString("[", ",", "]")},""" +
       s""""pass":$pass}"""
-    Files.writeString(Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CONCURRENCY_OUT",
-        "/root/repo/CONCURRENCY_r14.json")), json + "\n")
     println(json)
     spark.stop()
     if (!pass) sys.exit(1)

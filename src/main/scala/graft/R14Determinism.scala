@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.SortedMap
@@ -55,8 +54,8 @@ import org.apache.spark.sql.functions.col
   * `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 tools/runmain.sh \
   *    graft.R14Determinism /root/testdata/sf0.01 [modes-csv]`
   * (modes default: invariance,retry,speculation; subset via
-  * SPARK_GRAFT_VERIFY_QUERIES like Verify/Bench). Writes
-  * DETERMINISM_r14.json and prints the same JSON as the last line.
+  * SPARK_GRAFT_VERIFY_QUERIES like Verify). The JSON record is the
+  * last stdout line; the main writes no file.
   *
   * Dev/measurement harness — not part of the library surface.
   */
@@ -269,15 +268,6 @@ object R14Determinism {
       s""""speculative_launched":${speculativeLaunched.get()},""" +
       s""""walls_sec":${walls.map { case (k, v) => q(k) + ":" + v }
            .mkString("{", ",", "}")},"pass":$pass}"""
-    // a SUBSET drill must not clobber the committed full-roster
-    // artifact (the r10 Bench subset-guard lineage; a 2-query drill
-    // overwrote DETERMINISM_r14.json in r16 session 3 and had to be
-    // restored from git) — only a full-roster run writes the canonical
-    // path; subsets default to /tmp
-    Files.writeString(Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_DETERMINISM_OUT",
-        if (subset.nonEmpty) "/tmp/DETERMINISM_subset.json"
-        else "/root/repo/DETERMINISM_r14.json")), json + "\n")
     println(json)
     if (!pass) sys.exit(1)
   }

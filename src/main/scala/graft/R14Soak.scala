@@ -37,7 +37,7 @@ import graft.streaming.StreamIngest
   *
   * Output: JSONL per-batch metrics to `outDir/soak_batches.jsonl`,
   * samples to `outDir/soak_samples.jsonl`, ONE summary JSON line on
-  * stdout (and to SPARK_GRAFT_SOAK_OUT if set) with the leak verdicts.
+  * stdout with the leak verdicts.
   *
   * `runMain graft.R14Soak [target] [outDir]` — 500 batches by
   * default, ~10-20 min wall. Dev tool — not part of the library
@@ -266,9 +266,6 @@ object R14Soak {
       s""""ivf":${fmt(quintileGrowth("soak_ivf", "offset_ms"))}},""" +
       s""""out":"$outRoot"}""")
     println(line)
-    sys.env.get("SPARK_GRAFT_SOAK_OUT").foreach { p =>
-      Files.writeString(Paths.get(p), line + "\n")
-    }
     spark.stop()
   }
 

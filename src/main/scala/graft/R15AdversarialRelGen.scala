@@ -47,8 +47,8 @@ import org.apache.spark.sql.types._
   * the deployable one and is spec-pinned on the real query).
   *
   * Usage:
-  *   tools/runmain.sh graft.R15AdversarialRelGen /root/repo/testdata-advrel
-  *   tools/runmain.sh graft.R15AdversarialRelGen /root/repo/testdata-advrel-empty empty
+  *   tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel
+  *   tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel-empty empty
   *
   * `empty` variant: schema-correct EMPTY fact tables (orders,
   * lineitem, events) under normal dims — the empty-input crash class
@@ -73,7 +73,8 @@ object R15AdversarialRelGen {
   private def round2(x: Double): Double = math.floor(x * 100 + 0.5) / 100
 
   def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-advrel"
+    require(args.nonEmpty, "usage: graft.R15AdversarialRelGen <outDir> [empty]")
+    val outDir = args(0)
     val empty = args.length > 1 && args(1) == "empty"
     val spark = GraftSession("graft-adversarial-rel-gen")
 

@@ -37,7 +37,7 @@ import graft.operators.{Ann, Cdc}
   * index pointer would be.
   *
   * `runMain graft.R15IndexSoak [cycles] [dim]` (defaults 150, 16).
-  * Output: one JSON line (+ SPARK_GRAFT_SOAK_OUT file if set) with
+  * Output: one JSON line on stdout with
   * downsampled per-cycle curves and a pass flag. Dev tool —
   * measurement harness, not library surface.
   */
@@ -198,9 +198,6 @@ object R15IndexSoak {
       s""""errors":${errors.take(5).map(e => "\"" + e.replace("\"", "'") + "\"").mkString("[", ",", "]")},""" +
       s""""pass":$pass}"""
     println(line)
-    sys.env.get("SPARK_GRAFT_SOAK_OUT").foreach(p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        line.getBytes("UTF-8")))
     spark.stop()
     if (!pass) sys.exit(1)
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** Entry contract — see SURVEY.md §2 for the inventory.
   * `queries` is the union of the per-family suites; every SQL-
   * expressible operator also appears in `oracleSql` with matching
   * column names (the driver hash-compares against DuckDB).

@@ -337,12 +337,14 @@ object RelationalQueries {
       // set is the same answer with ONE sketch per partial — and the
       // distinct() is the same two-phase shuffle countDistinct costs
       // anyway. At 100 TB the old plan is a scale-killer; this one is
-      // a key-dedup plus a 1-row aggregate.
+      // a key-dedup plus a 1-row aggregate. distinct() keeps one NULL
+      // key row, so the exact side counts l_partkey, not rows:
+      // count(DISTINCT x) skips NULLs.
       Tables.lineitem(s, d)
         .select(col("l_partkey")).distinct()
         .agg(
           approx_count_distinct(col("l_partkey"), 0.01).as("a"),
-          count(lit(1)).as("exact_parts"))
+          count(col("l_partkey")).as("exact_parts"))
         // multiplicative form, NOT |a-e|/e: on an empty table e = 0
         // and under ANSI the division throws DIVIDE_BY_ZERO (r15
         // empty-facts rung); |a-e| <= 0.05e is the same predicate for

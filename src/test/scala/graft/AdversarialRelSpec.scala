@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle CANNOT express (R15AdversarialRelGen doc,
   * "deliberate NON-inclusions"): on these inputs the oracle tool
   * either throws or follows different semantics, so the deployable
-  * behavior is asserted here instead of via the hash gate.
+  * behavior is asserted here instead of via the hash gate. The last
+  * case pins a NULL-key count the hostile rung's oracle did catch, so
+  * tier-1 catches it too.
   */
 class AdversarialRelSpec extends SparkSpec {
   import spark.implicits._
@@ -53,5 +55,17 @@ class AdversarialRelSpec extends SparkSpec {
     assert(tried.filter(col("unit").isNull).count() == 1)
     val mn = tried.agg(min(col("unit"))).head().getDouble(0)
     assert(mn == 2.0, s"min unit cost should be 2.0, got $mn")
+  }
+
+  test("agg_approx counts distinct NON-NULL keys, like DuckDB's " +
+      "count(DISTINCT l_partkey): NULL keys never count as a part") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_advrel_approx").toString
+    Seq[Option[Long]](Some(1L), Some(2L), Some(2L), None, Some(3L), None)
+      .toDF("l_partkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val r = SparkEntry.queries("agg_approx")(spark, dir).head()
+    assert(r.getAs[Long]("exact_parts") == 3L)
+    assert(r.getAs[Boolean]("approx_within_5pct"))
   }
 }

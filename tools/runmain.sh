@@ -2,7 +2,8 @@
 # Run a graft main without sbt (no build-lock contention): uses the
 # classes sbt already compiled (in the checkout this script lives in)
 # plus the Spark jars.
-# Usage: tools/runmain.sh graft.Bench [args...]
+# Usage: tools/runmain.sh <main class> [args...]
+#   e.g. tools/runmain.sh graft.Bench <sfDir> BENCH_QUERIES.json
 ROOT=$(cd "$(dirname "$0")/.." && pwd)
 CLS=$1; shift
 exec java \
