@@ -49,7 +49,8 @@ object Bench {
   private final case class Exec(buildS: Double, totalS: Double,
       error: Option[String], delta: Option[BenchMetricsListener.Snapshot])
 
-  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  /** Also writes Verify's gate files. */
+  private[graft] val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
     .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
 
   private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
@@ -118,9 +119,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Bench <sfDir> <out.json> [query ...]")
     val all = SparkEntry.queries
-    val names = if (args.length > 2) args.drop(2).toSeq.distinct else all.keys.toSeq.sorted
-    val unknown = names.filterNot(all.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val names = SparkEntry.roster(args.drop(2).toSeq)
     val spark = GraftSession("graft-bench")
     val clean = try publish(measure(spark, args(0), names.map(n => n -> all(n))), args(1))
       finally spark.stop()

@@ -2,542 +2,20 @@ package graft
 
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Prints the physical-plan audit snapshot PLANS.md opens with, for the
-  * representative query set (`runMain graft.PlanAudit`). Dev tool;
-  * replaces the old REPL script (tools/plans.sc), which hit Scala
-  * console classloader bugs once the query set grew.
+/** Prints each named query's formatted physical plan:
+  * `tools/runmain.sh graft.PlanAudit <sfDir> <query ...>`. The plan
+  * record that is checked is PLAN_HASHES*.json (tools/planhash_diff.py);
+  * this is the printer for reading one plan.
   */
 object PlanAudit {
-  val names: Seq[String] = Seq(
-    "q1_agg", "q5_multijoin", "q3_topn", "asof_join", "sessionize",
-    "dedup_minhash", "dedup_embedding_lsh", "knn_join", "ann_bruteforce",
-    "etl_ingest_pipeline", "etl_failure_log", "sample_stratified",
-    "text_chunk", "ann_bruteforce_batch", "dedup_embedding_lsh_strict",
-    "etl_pattern_route", "dedup_resolve", "ann_ivf_indexed",
-    "pack_windows", "mix_token_budget",
-    "q4_exists", "q17_scalar", "window_range_frame",
-    "freq_ngrams", "text_decontaminate", "text_repetition", "semdedup",
-    "layout_partition_prune", "incr_agg", "resample_ffill",
-    "cdc_apply", "text_lm_score", "ann_pq",
-    "skew_join", "q18_bigcust", "window_ntile", "topk_group",
-    "quality_outliers",
-    "etl_profile", "window_sliding_distinct", "mix_temperature",
-    "ann_pq_indexed", "fuzzy_canonicalize", "src_xls", "batch_upsert",
-    "mm_image_features", "mm_phash_dedup",
-    "mm_audio_features", "mm_audio_dedup",
-    "dedup_incremental", "split_holdout", "text_substring_dedup",
-    "dedup_containment", "pipeline_excerpt_dedup", "corpus_shard_shuffle",
-    "quality_classifier", "dedup_incremental_near", "text_markup_strip",
-    "mix_curriculum", "embed_rp_reduce",
-    "q19_disjunct", "q21_late_supplier", "q22_idle_rich",
-    "ann_filtered", "ann_range", "dedup_soft_weights",
-    "q2_min_cost_supp", "q7_volume", "q8_market_share", "q9_profit",
-    "q10_returns", "q11_share_threshold", "q13_order_dist",
-    "q14_promo_share", "q15_top_supplier", "q16_supplier_count",
-    "q20_qty_surplus", "q12_shipmode",
-    "bm25_topk", "hybrid_rank_fusion", "sample_reservoir", "bm25_batch",
-    "tfidf_source_terms", "sample_weighted", "hybrid_rank_fusion_indexed")
-
-  /** Prose audit argument printed above a query's explain output —
-    * the why-this-plan-survives-100x note for queries whose cost is
-    * not obvious from the operator tree alone.
-    */
-  val notes: Map[String, String] = Map(
-    "dedup_components" -> (
-      "Baseline refresh r14 (dc13a52c -> 83df292e): components' auto " +
-        "strategy — the normalized edge set (920 rows at sf0.1, " +
-        "checkpointed + counted in one job) is under the 1e6-edge " +
-        "threshold, so the driver union-finds it and the labels enter " +
-        "this plan as a LocalTableScan instead of the star loop's " +
-        "LogicalRDD: ~10 per-round jobs collapse to one (R14StratAb: " +
-        "10.1x at sf0.1, 6.9x at testdata-sf10; identical labels " +
-        "asserted). The loop remains the above-threshold path — a " +
-        "100 TB dup graph is billions of edges — and is still what " +
-        "ClusterFaultSpec/DeterminismSpec pin (strategy=loop)."),
-    "dedup_resolve" -> (
-      "Baseline refresh r14 (dd14e56a -> 21ebe518): same components " +
-        "auto-strategy refresh as dedup_components — the label side " +
-        "of both resolve joins is now a LocalTableScan (accurate " +
-        "LocalRelation stats, so the broadcast gate fires exactly as " +
-        "it did off the checkpoint stats); corpus side unchanged, " +
-        "still zero corpus exchanges."),
-    "fuzzy_canonicalize" -> (
-      "Baseline refresh r14 (2c57d468 -> 00274c63): components auto " +
-        "strategy (see dedup_components) — the canonical-group label " +
-        "frame is driver-union-found below the edge threshold."),
-    "pipeline_dedup_corpus" -> (
-      "Baseline refresh r14 (c5946fa9 -> 76bbbbb9): components auto " +
-        "strategy (see dedup_components) inside the pipeline's " +
-        "resolve stage; candidate mining and verify stages unchanged."),
-    "pipeline_excerpt_dedup" -> (
-      "Baseline refresh r14 (c5946fa9 -> 76bbbbb9): components auto " +
-        "strategy (see dedup_components) inside the survivorship " +
-        "stage; the df-capped inverted-index mining is unchanged."),
-    "semdedup" -> (
-      "Baseline refresh r14 (3ab833bf -> aab6d276): the resolve " +
-        "consumed by the gate query rides the components " +
-        "auto-strategy refresh (see dedup_components). Previous " +
-        "refresh r13 below.\n\n" +
-      "Baseline refresh r13 (a965384a -> 3ab833bf): the gate query's " +
-        "orig-row filter moved from the literal `vec_id < 50` to a " +
-        "broadcast semi-join with the 50-row plantBases frame — the " +
-        "structure-robust plant rule (min-id representative per " +
-        "embedding-byte class, rank-keyed jitter) that keeps the " +
-        "planted fixture identical at the interleaved ScaleUp rungs, " +
-        "where `vec_id < 50` had become 5 vectors x 10 byte-twins and " +
-        "broke the \"originals survive\" premise. One extra 50-row " +
-        "broadcast (plus the tiny plantBases groupBy over the " +
-        "embeddings table, distinct classes bounded by the 2000 " +
-        "original vectors); the semdedup operator plan is unchanged."),
-    "dedup_incremental" -> (
-      "The audit point is what is ABSENT: neither the corpus nor the " +
-        "batch rides an Exchange. The corpus is scanned (text column " +
-        "only) twice — once into the tree-aggregated Bloom sketch (an " +
-        "eager separate job, not in this tree), once as the streamed " +
-        "side of a BroadcastHashJoin whose build side is the candidate " +
-        "fingerprints — and the batch is filtered row-local by the " +
-        "broadcast sketch, then anti-joined against the broadcast " +
-        "matched set. The only Exchanges below the presentation sort " +
-        "carry DISTINCT candidate fingerprints (partial HashAggregate " +
-        "before each, so they are map-side combined first): " +
-        "true dups + fpp * batch rows, broadcast-sized by " +
-        "construction. At 100 TB the corpus never shuffles."),
-    "text_substring_dedup" -> (
-      "A rewrite op's minimum exchange budget: one shuffle mining the " +
-        "df set (distinct (doc, shingle) pairs, map-side combined), " +
-        "the mined repeated set joined back over the positional " +
-        "shingles, one shuffle of the COVERED positions only, and one " +
-        "id-keyed join to rebuild. The rebuild (filter-by-index over " +
-        "the word array) is row-local builtin HOFs.\n\n" +
-        "The mined-set join is STRATEGY-ADAPTIVE (r10 — " +
-        "`TextFilters.useMinedBroadcast`, the `Dedup.incrementalNew` " +
-        "plan-stats gate): `df >= minDf` does NOT bound the mined " +
-        "set, so the broadcast hint is applied only while the corpus " +
-        "scan's plan-stats stay under 32x the session broadcast " +
-        "threshold (mined bytes <= corpus shingle bytes / minDf, so " +
-        "the ceiling transfers); above it — the web-corpus regime " +
-        "where the frequent-shingle set itself is huge — the hint is " +
-        "dropped and the join runs as a plain shuffle join: the " +
-        "corpus pays ONE exchange exactly when the broadcast would " +
-        "OOM. Both shapes are output-identical (TextFiltersSpec pins " +
-        "broadcast == shuffle row-for-row and asserts both plan " +
-        "shapes with the session threshold disabled). The " +
-        "below-ceiling plan is audited here; the above-ceiling shape " +
-        "replaces the BroadcastHashJoin(mined) with SortMergeJoin " +
-        "plus an Exchange per side — everything downstream is " +
-        "unchanged. Same gate on boilerplateFraction's frequent-set " +
-        "join (text_boilerplate).\n\n" +
-        "FIXPOINT form (r10): `removeRepeatedSpansFixpoint` iterates " +
-        "THE SAME single-pass plan — each pass's input is the " +
-        "previous pass's localCheckpoint (lineage truncated, the " +
-        "components-loop discipline), so the audited plan is the " +
-        "per-pass plan verbatim; the only additions per pass are the " +
-        "left-outer merge re-attaching emptied docs and the one " +
-        "sum(n_removed) action that materializes the checkpoint and " +
-        "reads the convergence signal. Pass count is data-bounded " +
-        "(kept words strictly decrease), capped by maxPasses with " +
-        "the removal audit returned to the caller."),
-    "quality_classifier" -> (
-      "Count-based model training with no learning loop: the seed " +
-        "explodes once into (label, word) and ONE hash-partitioned " +
-        "groupBy(word) (partial HashAggregate first, so class counts " +
-        "are map-side combined) yields the model; the totals row is a " +
-        "1-row broadcast crossJoin. Scoring explodes the corpus once " +
-        "and joins the model through the broadcast-ceiling strategy " +
-        "gate — broadcast below it (the plan here), shuffle join " +
-        "above, because the vocab is corpus-mined and unbounded by " +
-        "contract. Scores are integer sums of per-word e6 units, so " +
-        "the per-doc aggregation is order-independent — what makes " +
-        "the whole train-then-score composition hash-verifiable. The " +
-        "corpus's only exchange is the final per-doc/per-source " +
-        "aggregation."),
-    "dedup_incremental_near" -> (
-      "The near-dup face of the incremental gate; the audit point is " +
-        "that the CORPUS never rides an Exchange keyed by anything " +
-        "but its own band index build (one-off per ingest epoch, " +
-        "reusable via corpusBanded). Batch bands join the corpus band " +
-        "index as the BROADCAST side (strategy-gated: an increment is " +
-        "small by contract; above the ceiling it degrades to a " +
-        "shuffle of skinny band rows); the exact verify fetches each " +
-        "side's shingle sets by broadcast semi-join on the candidate " +
-        "id sets — bounded by |batch| x collisions, never by the " +
-        "corpus — and the final anti-join broadcasts the near-dup id " +
-        "set back at the batch. LSH recall is the banding contract " +
-        "(P(miss) = (1-j^4)^16); precision is exact."),
-    "text_markup_strip" -> (
-      "Pure row-local codegen: one regexp_replace + six literal " +
-        "replaces + a whitespace collapse, inside a single " +
-        "WholeStageCodegen span over the scan — zero exchanges below " +
-        "the presentation sort. The planted-markup query " +
-        "hash-verifies the full cleaned text, so the oracle would " +
-        "catch a single mis-ordered entity replace."),
-    "mix_curriculum" -> (
-      "Exact global rank without the classic scale cliff: " +
-        "row_number() OVER (ORDER BY score, id) funnels the corpus " +
-        "through ONE reducer; the plan here is one RANGE exchange " +
-        "(the global order laid across all tasks) + an " +
-        "intra-partition sort, then two row-local RDD passes (a " +
-        "driver-bounded per-partition count, a broadcast-offset " +
-        "numbering). Stage assignment is an integer `div` formula — " +
-        "no second pass, no join. Spec-pinned equal to the window " +
-        "form; the oracle hash-verifies every (doc, score, rank, " +
-        "stage) row against a row_number replay."),
-    "corpus_shard_shuffle" -> (
-      "Deterministic shard materialization WITHOUT the per-shard " +
-        "window funnel: a 16-way window row_number would sort each " +
-        "shard through one reducer (1/16th of the corpus per task at " +
-        "any cluster size). The plan instead shows ONE range " +
-        "exchange on (shard, key, id) with an intra-partition sort — " +
-        "the global order laid out across all tasks — and the " +
-        "numbering itself happens in two row-local RDD passes (a " +
-        "per-(partition, shard) count collected to the driver, " +
-        "bounded by partitions + shards, then a broadcast-offset " +
-        "second pass). Spec-pinned equal to the window form and " +
-        "invariant to input partitioning; the oracle replays the " +
-        "window semantics in DuckDB and hash-verifies every (id, " +
-        "shard, pos) row."),
-    "pipeline_excerpt_dedup" -> (
-      "Containment into survivorship. Candidate mining is the " +
-        "df-capped inverted shingle index: one explode to (id, " +
-        "shingle) postings, a partial-aggregated df count whose " +
-        "df <= maxDf filter DROPS stop-shingle posting lists (the " +
-        "skew that would otherwise explode the self-join), then the " +
-        "per-shingle self-join over capped postings — pair work " +
-        "bounded by sum df^2 with df <= maxDf, linear in corpus " +
-        "size, never all-pairs. Containment verify touches " +
-        "candidates only (two id-keyed joins against the shared " +
-        "shingle-set cache), and resolve is the standard star loop " +
-        "over the verified edge subset. The corpus pays the " +
-        "postings shuffle and the bounded self-join; no stage is " +
-        "quadratic in documents."),
-    "split_holdout" -> (
-      "Pure row-local projection over the scan: md5 prefix compare " +
-        "inside whole-stage codegen, no Exchange anywhere before the " +
-        "presentation orderBy. Keyed on normalized content so dup " +
-        "docs co-locate in a split regardless of layout; nothing in " +
-        "the plan depends on partitioning, which is the reproducibility " +
-        "argument at any scale."),
-    "fuzzy_canonicalize" -> (
-      "One shuffle on the 3-char prefix block key; within a block the " +
-        "built-in `levenshtein` (codegen'd) runs behind a length " +
-        "pre-filter, so the quadratic term is bounded by the occupancy " +
-        "cap (over-cap blocks are dropped and AUDITED via " +
-        "droppedBlocks, never silently exploded). The trailing " +
-        "components loop is the same large-star/small-star machinery " +
-        "as dedup_components: one action per round over edges that " +
-        "number at most cap-squared per block. At 100x: a hot prefix " +
-        "degrades to a logged drop, not a straggler task."),
-    "src_xls" -> (
-      "The .xls fixture is written and parsed DRIVER-side (OLE2/BIFF8 " +
-        "is a drop-zone compatibility format; nation is a bounded " +
-        "dim), so the plan below is just the summary agg over the " +
-        "parsed rows: one exchange for the groupBy, nothing pushed " +
-        "because the source is an in-memory localtable. Scale does " +
-        "not flow through this reader — big data arrives as " +
-        "CSV/parquet; the reader exists so legacy drops don't poison " +
-        "a zone. Oversized workbooks reject via the " +
-        "file_too_large_for_rescue gate before any buffering."),
-    "batch_upsert" -> (
-      "Copy-on-write merge: the target scan is PRUNED to the touched " +
-        "partitions (partition filter from a bounded distinct-collect " +
-        "of the batch's partition values — visible as PartitionFilters " +
-        "on the scan), the batch side broadcasts for the anti join, " +
-        "and only touched directories are rewritten + swapped by " +
-        "rename (constant metadata ops per partition, rollback-safe, " +
-        "object-store caveat documented on SwapCommitter). A 100 TB " +
-        "table with a 10-partition batch reads and writes 10 " +
-        "partitions. The merge itself runs eagerly inside the query " +
-        "body, so the plan below is the post-merge verification scan " +
-        "of the table; the pruned merge-read plan is asserted in " +
-        "CdcSpec at the file level (untouched partitions keep their " +
-        "mtimes)."),
-    "mm_image_features" -> (
-      "Row-local end to end: PNG fixture encode, real javax.imageio " +
-        "decode, and perceptual-hash extraction all run inside two " +
-        "back-to-back mapPartitions over the documents scan — ZERO " +
-        "exchanges before the final presentation sort. Decode " +
-        "parallelism therefore equals scan parallelism: at 100 TB the " +
-        "work is embarrassingly parallel and bounded per-task by " +
-        "maxPartitionBytes. Corrupt payloads yield decoded=false rows " +
-        "(audit, not task failure), so one bad file cannot kill a " +
-        "stage. On a real corpus the fixture-encode map disappears " +
-        "and the scan reads image bytes directly from parquet binary " +
-        "columns with metadata-only pushdown for width/type filters."),
-    "mm_phash_dedup" -> (
-      "Image near-dup with the SimHash scale shape, plus an " +
-        "exact-signature collapse: decode runs ONCE into a persisted " +
-        "skinny (id, dHash) frame, byte-identical hashes pair at " +
-        "distance 0 via one sig-partitioned self-join, and the " +
-        "4x16-bit band bucket self-join runs over DISTINCT sigs only " +
-        "— a million-copy re-upload clump contributes one row per " +
-        "band bucket, not clump² join rows. Verified sig pairs expand " +
-        "back to image pairs (output-bound); saturated buckets are " +
-        "occupancy-gated (maxBucket) with a droppedPhashBuckets " +
-        "audit. Image bytes never enter any exchange; decode " +
-        "parallelism is the input's partitioning (the query " +
-        "repartitions the skinny projection first). At 100 TB: decode " +
-        "is scan-parallel, clumps are collapsed, and residual pair " +
-        "work is gated bucket occupancy."),
-    "mm_audio_features" -> (
-      "Same shape as mm_image_features, different decoder: WAV " +
-        "fixture synthesis and the hand-rolled RIFF/PCM parse + " +
-        "level-stat/eHash extraction run inside back-to-back " +
-        "mapPartitions over the documents scan — zero exchanges " +
-        "before the presentation sort, decode parallelism = scan " +
-        "parallelism. Per-clip cost is sample count, so a real " +
-        "corpus's longer clips shift the per-task constant, not the " +
-        "plan. Non-PCM/corrupt payloads yield decoded=false audit " +
-        "rows; truncated data chunks clamp to the last whole frame " +
-        "instead of discarding the readable prefix."),
-    "mm_audio_dedup" -> (
-      "mm_phash_dedup's plan with eHash signatures: decode once into " +
-        "a persisted skinny (id, eHash) frame, then the SHARED " +
-        "SigPairs kernel — exact-signature collapse (byte-identical " +
-        "clips pair at distance 0 via one sig-partitioned self-join " +
-        "and stay out of the band join), occupancy-gated 4x16-bit " +
-        "band bucket join over DISTINCT sigs, exact Hamming verify, " +
-        "output-bound expansion back to clip pairs. Audio bytes " +
-        "never enter any exchange. Because the kernel is literally " +
-        "the same code path, the phash plan asserts cover this shape " +
-        "too; sub-linear at the second decade out of the box " +
-        "(SCALING.md r6 audio section)."),
-    "window_ntile" -> (
-      "NOT the ntile window function: o_orderstatus has 3 distinct " +
-        "values, so Window.partitionBy(status) would sort the whole " +
-        "table in 3 tasks — and ntile can't be WindowGroupLimit-" +
-        "pruned because every row gets a tile. Rank.ntileBy instead: " +
-        "range-partition on (status, price, key) — the parallel sort " +
-        "uses ALL shuffle partitions — then a per-(partition, key) " +
-        "metadata aggregate (bounded by partitions × 3 statuses) " +
-        "feeds driver prefix offsets broadcast back; exact NTILE " +
-        "arithmetic from the global rank. The plan shows the range " +
-        "exchange + one broadcast join + the final group-by — no " +
-        "single-key sort anywhere. sf10: 12.9 s → 2.8 s."),
-    "bm25_topk" -> (
-      "Full-corpus keyword scoring whose plan moves O(1) corpus " +
-        "bytes: tf/dl come from the native graft_term_counts kernel " +
-        "(ONE codegen'd byte scan per row — the first, HOF " +
-        "formulation was interpreted/CodegenFallback, so every tf " +
-        "column and every pushed-down filter conjunct re-ran the " +
-        "regex normalize + split: 12.6 s at the 500 k-doc rung vs " +
-        "3.2 s with the kernel, a measured 4x; the r12 fingerprint " +
-        "refresh records exactly this change); corpus stats (n_docs, " +
-        "sum_dl, per-term df, all INTEGER aggregates) are one " +
-        "partial-aggregated 1-row frame broadcast back via " +
-        "crossJoin; top-k is TakeOrderedAndProject (per-partition " +
-        "heaps, no global sort). The only Exchange in the tree " +
-        "carries ONE row, so retrieval cost tracks the scan at any " +
-        "corpus size."),
-    "bm25_batch" -> (
-      "The many-queries term-TABLE shape: the corpus explodes, but " +
-        "every exploded word rides a broadcast SEMI-join against the " +
-        "query vocabulary IN THE SCAN STAGE, so the only corpus-" +
-        "derived exchange carries (doc, query-term) matches — at a " +
-        "realistic vocabulary hit rate that is a few percent of the " +
-        "token stream, and it is map-side combined to distinct " +
-        "(doc, term) pairs first. Contributions are e6-quantized " +
-        "LONGS so the per-(query, doc) score sum is an integer " +
-        "aggregation (merge-order-free at any parallelism); the " +
-        "per-query top-k plans as WindowGroupLimit, k rows per query " +
-        "per map partition. Shuffled bytes scale with matches, not " +
-        "corpus — the right asymptote for an eval-suite of hundreds " +
-        "of keyword queries at 100 TB. r13: PHRASE terms — the token " +
-        "stream now concatenates word-bigram OCCURRENCES (native " +
-        "WordNgrams kernel, one extra row-local array per doc) for " +
-        "the n-gram grains actually present in the query vocabulary; " +
-        "the semi-join still kills non-query grams inside the scan " +
-        "stage, so the exchange shape is unchanged and an all-unigram " +
-        "batch plans identically to r12 (spec-asserted)."),
-    "hybrid_rank_fusion_indexed" -> (
-      "The deployment shape of two-leg retrieval (r13 ask #5): the " +
-        "vector leg probes the STORED list-partitioned IVF index — " +
-        "the audit point is the index scan's PartitionFilters on " +
-        "list_id, which at nprobe/nlist = 1/2 reads half the index " +
-        "and at production nlist (thousands of lists) reads " +
-        "nprobe/nlist of it, independent of corpus size. The BM25 " +
-        "leg is the bm25_topk plan (one 1-row exchange). Fusion " +
-        "joins two <= 100-row frames; the recall-contract aggregate " +
-        "adds one brute-force exact leg IN THE GATE QUERY ONLY (the " +
-        "referee, priced at gate scale, absent from the deployment " +
-        "plan). New PLAN_HASHES baseline entry 12261dd9317e4589 — " +
-        "a new query, not a drift."),
-    "tfidf_source_terms" -> (
-      "Corpus reporting with ONE corpus-sized exchange: the explode " +
-        "is immediately reduced to DISTINCT (group, doc, word) " +
-        "presence pairs by a partial-aggregated groupBy (map-side " +
-        "combine collapses each doc's repeated words in the scan " +
-        "stage), and every later stage — global df, group sizes, the " +
-        "coverage x idf scoring joins — runs on frames bounded by " +
-        "groups x vocabulary, all broadcast. Integer counts, fixed-" +
-        "association e6 scalar, WindowGroupLimit top-k per group: the " +
-        "full report replays exactly in SQL and the corpus never " +
-        "shuffles twice."),
-    "hybrid_rank_fusion" -> (
-      "Two independent corpus scans (BM25 lexical leg on the native " +
-        "graft_term_counts kernel — see bm25_topk — and the brute-" +
-        "force cosine leg), each ending in TakeOrderedAndProject(100); " +
-        "everything after the two limits — the rank windows and the " +
-        "full-outer RRF join — runs on <=100-row frames (the " +
-        "unpartitioned windows are deliberate and safe: they sort " +
-        "post-limit frames, never the corpus). At 100 TB the cost is " +
-        "exactly two scans; the fusion is free."),
-    "sample_weighted" -> (
-      "Weight-proportional WOR sampling (Efraimidis-Spirtakis) with " +
-        "the reservoir prefilter discipline: per-row key = min of w " +
-        "md5 draws (row-local, Σw hashes total — linear in total " +
-        "weight), a broadcast scalar threshold at margin*k/Σw keeps " +
-        "~margin*k survivors (P(key<t) ~ w*t), and only that " +
-        "k-bounded frame rides the global rank window. Coverage is " +
-        "CHECKED: >= k survivors certifies every true top-k key " +
-        "cleared the threshold, so the prefiltered ranks ARE the " +
-        "global ranks. min-of-uniforms instead of u^(1/w) is what " +
-        "lets the DuckDB oracle replay the exact selected set — no " +
-        "pow/ln in the sort key."),
-    "sample_reservoir" -> (
-      "Exact k-per-group sampling WITHOUT sorting the corpus: a " +
-        "broadcast per-group threshold join + row-local hash-prefix " +
-        "filter keeps ~margin*k rows per group (Binomial-concentrated), " +
-        "and only the survivor frame rides the partitionBy(group) " +
-        "window Exchange. hash < t selects a PREFIX of the group's " +
-        "(hash, key) order, so survivor ranks equal global ranks; " +
-        "coverage is CHECKED (loud require naming the margin), not " +
-        "assumed. At 100 TB the window sorts thousands of rows per " +
-        "group while the corpus is scanned exactly once."),
-    "embed_rp_reduce" -> (
-      "JL random projection, entirely ROW-LOCAL: the ±1 sign matrix " +
-        "is hash-derived and compiled into the expression as literal " +
-        "arrays, each of the 16 output components one zip_with + " +
-        "aggregate over the 64-dim input inside whole-stage codegen, " +
-        "then a posexplode to long form — zero exchanges below the " +
-        "presentation sort, so reduction throughput is scan " +
-        "throughput at any corpus size. Integer e6 micro-unit sums " +
-        "make the arithmetic order-independent, which is what lets " +
-        "the FULL reduced table hash-verify against a DuckDB rebuild " +
-        "of the identical matrix. For matrices too large to inline " +
-        "(4096x512), reduceViaJoin trades this for a broadcast " +
-        "(i, j, s) frame + one map-side-combined (id, j) aggregation " +
-        "— one exchange of already-reduced rows; spec-pinned " +
-        "row-identical."),
-    "q19_disjunct" -> (
-      "The audit point is ONE BroadcastHashJoin on p_partkey with the " +
-        "three-branch disjunction evaluated post-join inside " +
-        "whole-stage codegen — lineitem is scanned once. The " +
-        "anti-pattern this pins against is a per-branch " +
-        "union-of-joins (three fact scans); if a future rewrite " +
-        "splits the OR into a union, this plan is the canary."),
-    "q2_min_cost_supp" -> (
-      "The correlated '= (SELECT min ...)' decorrelates to a window " +
-        "min over the ALREADY-AGGREGATED (part, supplier) frame: the " +
-        "fact is scanned once (PlanSpec asserts it), pays one " +
-        "groupBy shuffle, and the window's repartition moves only " +
-        "distinct (part, supplier) pairs — bounded by |part| x " +
-        "|suppliers per part|, orders of magnitude under the fact. " +
-        "The EU supplier slice semi-joins as a broadcast BEFORE the " +
-        "aggregate so non-qualifying rows never shuffle. min over " +
-        "per-row IEEE divisions has no summation-order term, so the " +
-        "value-equality filter is engine-stable (oracle hash-binds)."),
-    "q20_qty_surplus" -> (
-      "Per-part totals come from a window over the aggregated " +
-        "(part, supplier) frame — the textbook alternative is a " +
-        "self-join of the fact against its own per-part rollup, " +
-        "which scans lineitem twice and shuffles it once more. " +
-        "Integral quantities make the >50% threshold exact in both " +
-        "engines (20 exactly-at-half pairs at sf0.01 are excluded " +
-        "identically). The oracle binds on per-supplier dominated- " +
-        "part COUNTS because the bare qualifying-supplier list is " +
-        "near-constant at every SF (single-supplier parts are " +
-        "trivially dominated) and would not discriminate."),
-    "q12_shipmode" -> (
-      "Derived-column fact query: receipt/commit/mode are pure " +
-        "hash/interval functions of base columns, so their " +
-        "predicates cannot push below the projection — the plan " +
-        "instead carries the REDUNDANT implied window on the base " +
-        "l_shipdate column (receipt = ship + 1..30 d bounds ship " +
-        "from the receipt window), which lands in PushedFilters and " +
-        "prunes fact row groups before any derivation runs. The " +
-        "two-bucket priority count is one partial+final aggregate " +
-        "over the joined slice; at gate scale orders broadcasts, at " +
-        "100 TB the same declarative join shuffles on o_orderkey — " +
-        "either way lineitem is scanned once (PlanSpec pins the " +
-        "single scan, the pushed window, and the 5-column " +
-        "ReadSchema)."),
-    "q21_late_supplier" -> (
-      "Double correlated EXISTS/NOT-EXISTS with zero extra fact " +
-        "joins: per-(order, supplier) lateness and the per-order " +
-        "(n_supp, n_late) rollup are two map-side-combined " +
-        "aggregates over ONE lineitem-orders join; the lone-late " +
-        "filter is a semi-join of the persisted per-supplier frame " +
-        "against its own rollup (persist: 2 consumers), and the " +
-        "supplier dim broadcasts. A naive correlated form re-joins " +
-        "lineitem twice per subquery."),
-    "q22_idle_rich" -> (
-      "Global scalar subquery as a 1-row broadcast crossJoin (no " +
-        "shuffle), then a broadcast ANTI join whose BUILD side is " +
-        "the filtered urgent-1998 custkey slice — orders never " +
-        "shuffles, customer streams. The priority/date filters show " +
-        "as PushedFilters on the orders scan."),
-    "ann_filtered" -> (
-      "Filtered ANN as pure composition: the metadata predicate sits " +
-        "BELOW the cosine scorer, so the scan carries " +
-        "PushedFilters [IsNotNull(vec_id), Not(EqualTo(vec_id,0))] " +
-        "and the label residue evaluates in the same codegen stage — " +
-        "excluded vectors never reach the kernel. Zero exchanges " +
-        "before the global top-k."),
-    "dedup_soft_weights" -> (
-      "Duplicate-aware weighting without the per-group window " +
-        "funnel: one map-side-combined groupBy(fp) builds the " +
-        "group-size frame (one row per distinct fingerprint), joined " +
-        "back through the broadcast-ceiling gate. The audit point is " +
-        "the corpus side carrying ZERO exchanges below the ceiling — " +
-        "R11Probe3 caught the ungated form leaving a pre-AQE " +
-        "ENSURE_REQUIREMENTS fp-shuffle in place even after AQE's " +
-        "broadcast conversion, parking a 1M-copy clump in one task " +
-        "(AQE skew split never engages on a broadcast probe side). " +
-        "Above the ceiling: plain shuffle join, where the skew split " +
-        "DOES engage past the threshold. Weight arithmetic is " +
-        "integer floor division, row-local."),
-    "topk_group" -> (
-      "The row_number-top-k cousin of window_ntile's shape, kept on " +
-        "the plain window BY DESIGN: with rk <= 3 Spark plants " +
-        "map-side AND reduce-side WindowGroupLimit, so every scan " +
-        "task pre-prunes to 3 rows per priority before the " +
-        "5-partition final sort sees anything — the straggler never " +
-        "materializes and the cost is the orders scan itself. The " +
-        "audit pins both WindowGroupLimit nodes; if a future change " +
-        "drops the rank filter below the window, this plan is the " +
-        "regression canary."))
-
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: graft.PlanAudit <sfDir> <query ...>")
+    val names = SparkEntry.roster(args.tail.toSeq)
     val spark = GraftSession("graft-plan-audit")
-    val d = "/root/testdata/sf0.001"
-    // With explicit query names: print just those plans (quick
-    // iteration) instead of the whole snapshot.
-    if (args.nonEmpty) {
-      args.foreach { n =>
-        println(s"== $n ==")
-        println(SparkEntry.queries(n)(spark, d).queryExecution
-          .explainString(FormattedMode).take(4000))
-      }
-      spark.stop()
-      return
-    }
-    val sb = new StringBuilder(
-      "# Physical plans (explain formatted) — audit snapshot, sf0.001\n\n" +
-        "Regenerate with `tools/runmain.sh graft.PlanAudit > snapshot.md` " +
-        "(after `sbt compile`) and merge it over the per-query sections " +
-        "above the hand-written notes at the end of PLANS.md.\n")
-    names.foreach { n =>
-      sb.append(s"\n## $n\n\n")
-      notes.get(n).foreach(note => sb.append(note + "\n\n"))
-      sb.append("```\n")
-      sb.append(SparkEntry.queries(n)(spark, d).queryExecution
-        .explainString(FormattedMode).take(4000))
-      sb.append("\n```\n")
-    }
-    // stdout, not PLANS.md: the committed file carries hand-written
-    // rationale sections after the snapshot (tools/planhash_diff.py
-    // asks for one per baseline refresh) that a rewrite would drop
-    print(sb.toString)
-    spark.stop()
+    try names.foreach { n =>
+      println(s"== $n ==")
+      println(SparkEntry.queries(n)(spark, args(0)).queryExecution
+        .explainString(FormattedMode))
+    } finally spark.stop()
   }
 }

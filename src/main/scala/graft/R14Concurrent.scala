@@ -45,10 +45,9 @@ import scala.collection.immutable.SortedMap
   * therefore accumulate within a pass — bounded by the gate scale,
   * and LRU eviction handles it at larger ones.
   *
-  * `tools/runmain.sh graft.R14Concurrent /root/testdata/sf0.01
-  *    [threads] [dupN]` (defaults 8, 4; subset via
-  * SPARK_GRAFT_VERIFY_QUERIES). The JSON record is the last stdout
-  * line; the main writes no file.
+  * `tools/runmain.sh graft.R14Concurrent <sfDir>
+  *    [threads [dupN [query ...]]]` (defaults 8, 4, the full roster).
+  * The JSON record is the last stdout line; the main writes no file.
   *
   * Dev/measurement harness — not part of the library surface.
   */
@@ -76,13 +75,7 @@ object R14Concurrent {
     val sfDir = args(0)
     val nThreads = if (args.length > 1) args(1).toInt else 8
     val dupN = if (args.length > 2) args(2).toInt else 4
-    val subset = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val roster = subset.fold(SparkEntry.queries.keySet.toSeq.sorted)(qs => {
-      val unknown = qs -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-      qs.toSeq.sorted
-    })
+    val roster = SparkEntry.roster(args.drop(3).toSeq)
     // FAIR: the worker threads' jobs round-robin across one pool per
     // thread instead of queueing FIFO behind whichever thread came first
     val spark = GraftSession("graft-concurrent",

@@ -52,10 +52,10 @@ import org.apache.spark.sql.functions.col
   * the standing bar), rows sorted, SHA-256.
   *
   * `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 tools/runmain.sh \
-  *    graft.R14Determinism /root/testdata/sf0.01 [modes-csv]`
-  * (modes default: invariance,retry,speculation; subset via
-  * SPARK_GRAFT_VERIFY_QUERIES like Verify). The JSON record is the
-  * last stdout line; the main writes no file.
+  *    graft.R14Determinism <sfDir> [modes-csv [query ...]]`
+  * (modes default: invariance,retry,speculation,clusterchaos; no
+  * queries means the full roster). The JSON record is the last stdout
+  * line; the main writes no file.
   *
   * Dev/measurement harness — not part of the library surface.
   */
@@ -140,14 +140,7 @@ object R14Determinism {
     val modes: Set[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).toSet
       else Set("invariance", "retry", "speculation", "clusterchaos")
-    val subset = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach { qs =>
-      val unknown = qs -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    }
-    val roster = subset.fold(SparkEntry.queries.keySet.toSeq.sorted)(
-      _.toSeq.sorted)
+    val roster = SparkEntry.roster(args.drop(2).toSeq)
 
     val configs = scala.collection.mutable.LinkedHashMap
       .empty[String, SortedMap[String, String]]

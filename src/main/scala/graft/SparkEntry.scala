@@ -39,6 +39,16 @@ object SparkEntry {
         }
       }
 
+  /** The mains' roster from their trailing `[query ...]` arguments: no
+    * names means every query, sorted; otherwise the names in the order
+    * given, each once. Unknown names fail, listed. */
+  def roster(names: Seq[String]): Seq[String] = {
+    val all = queries.keySet
+    val unknown = names.filterNot(all)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq.sorted else names.distinct
+  }
+
   /** DuckDB-runnable oracle per SQL-expressible query (same column
     * names/aliases as the Spark side; rows-only ops are omitted).
     */

@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * `Window.partitionBy(key).orderBy(...)` hash-partitions on the key:
   * with 3 distinct statuses the whole table sorts in 3 tasks, and at
   * 100 TB those are stragglers that no amount of executors helps
-  * (the window_ntile plan audit shows exactly that shape). ntile
+  * (the plain-window form of window_ntile has exactly that shape). ntile
   * cannot be WindowGroupLimit-pruned like row_number-top-k either —
   * every row gets a tile, so every row must be ranked.
   *

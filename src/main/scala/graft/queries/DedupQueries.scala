@@ -136,7 +136,10 @@ object DedupQueries {
     // floor(1e6/n) weight, and a canonical flag (the planted copies
     // of doc_id < 50 weigh 500000 each, their originals flagged
     // canonical). One map-side-combined groupBy(fp) + one AQE-skew-
-    // handled join back — no per-group window funnel.
+    // handled join back — no per-group window funnel. Below the
+    // broadcast ceiling the group-size frame broadcasts and the corpus
+    // side carries no exchange; above it the join is a plain shuffle
+    // join, where the skew split engages.
     "dedup_soft_weights" -> ((s, d) => {
       Dedup.softWeights(docsWithDups(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))
@@ -146,7 +149,9 @@ object DedupQueries {
     // new batch against the even-id half, plus 20 even docs
     // re-submitted under fresh ids (the planted drops). Bloom
     // prefilter + broadcast verify — exact vs the oracle's NOT IN,
-    // no corpus or batch shuffle anywhere in the plan.
+    // no corpus or batch shuffle anywhere in the plan: the only
+    // exchanges below the presentation sort carry DISTINCT candidate
+    // fingerprints, map-side combined, broadcast-sized by construction.
     "dedup_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // re-submission ids offset past max(doc_id) — same dynamic-offset
@@ -158,10 +163,10 @@ object DedupQueries {
         .select(col("doc_id"), col("text"))
         .union(docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
           .select((col("doc_id") + off).as("doc_id"), col("text")))
-      // strategy pinned to "bloom": this query demonstrates (and the
-      // PLANS.md audit documents) the no-shuffle shape a 100 TB
-      // corpus needs; "auto" would pick the plain broadcast anti-join
-      // at oracle scale. Crossover measured in SCALING.md (IncrAb).
+      // strategy pinned to "bloom": this query demonstrates the
+      // no-shuffle shape a 100 TB corpus needs; "auto" would pick the
+      // plain broadcast anti-join at oracle scale. Crossover measured
+      // in SCALING.md (IncrAb).
       Dedup.incrementalNew(corpus, batch, "doc_id", "text",
           strategy = "bloom")
         .orderBy(col("doc_id"))
@@ -179,6 +184,10 @@ object DedupQueries {
     // (1-0.93^4)^16 ~ 2.6e-10 per pair, and exact copies in the
     // corpus collide in every band), and the exact verify kills all
     // false candidates — the dedup_minhash delegation precedent.
+    // Plan: the corpus rides no exchange but its own band-index build;
+    // batch bands join that index as the broadcast side, and the
+    // verify fetches shingle sets by broadcast semi-join on the
+    // candidate ids, bounded by the batch, never by the corpus.
     "dedup_incremental_near" -> ((s, d) => {
       import graft.functions.{TextFunctions => T}
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -306,6 +315,9 @@ object DedupQueries {
     // delegates to the same exact kernel (see dedup_embedding_lsh),
     // so this frame IS the LSH pair frame; the inline-exact
     // equivalence stays spec-covered (DedupSpec components tests).
+    // Below components' 1e6-edge threshold the driver union-finds the
+    // edges, so the labels enter this plan as a LocalTableScan, not the
+    // star loop's LogicalRDD.
     "dedup_components" -> ((s, d) => {
       Dedup.components(s.read.parquet(pairEdgeDir(s, d, 0.4)))
         .groupBy(col("label"))
@@ -347,7 +359,9 @@ object DedupQueries {
     // components, survivorship — over the same planted corpus.
     // Natural exact dups ride the same edges (containment 1.0), so
     // the summary also covers whole-doc dedup through the containment
-    // path.
+    // path. The df <= maxDf filter drops stop-shingle posting lists
+    // before the per-shingle self-join, so pair work is bounded by
+    // sum(df^2) — linear in corpus size, never all-pairs.
     "pipeline_excerpt_dedup" -> ((s, d) => {
       import graft.functions.{TextFunctions => T}
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -378,6 +392,8 @@ object DedupQueries {
     // the singleton passthrough. The pair set comes from the
     // PERSISTED edge frame (pairEdgeDir above) — resolve is the
     // consume-the-edges stage, not a second run of the pair kernel.
+    // The labels are a driver union-find LocalTableScan, as in
+    // dedup_components, and the corpus side has no exchange.
     "dedup_resolve" -> ((s, d) => {
       val embs = Tables.embeddings(s, d)
       val pairs = s.read.parquet(pairEdgeDir(s, d, 0.4))
@@ -494,6 +510,9 @@ object DedupQueries {
     // reference's blind dim appends create (dataframe_tasks.py:78).
     // Fixture values are literals, so the oracle is the literal
     // expected mapping (same convention as src_file_gate).
+    // Plan: one shuffle on the 3-char prefix block key; within a block
+    // the codegen'd levenshtein runs behind a length pre-filter, and an
+    // over-cap block is dropped and audited (droppedBlocks).
     "fuzzy_canonicalize" -> ((s, d) => {
       import s.implicits._
       val dirty = Seq(

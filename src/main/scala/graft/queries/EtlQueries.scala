@@ -237,6 +237,8 @@ object EtlQueries {
     // read or rewritten (CdcSpec asserts untouched files byte-stable
     // by mtime). The driver verifies the merged table content; the
     // partition-pruned read + staged rename is the 100 TB mechanism.
+    // The merge runs eagerly inside the query body, so the returned
+    // plan is the post-merge verification scan of the table.
     "batch_upsert" -> ((s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("graft_cow_q").toString
       val base = Tables.customer(s, d).filter(col("c_custkey") <= 1500)

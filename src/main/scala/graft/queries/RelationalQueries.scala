@@ -186,6 +186,9 @@ object RelationalQueries {
     // (status, price, key) instead — fully parallel sort, exact
     // NTILE semantics from rank arithmetic (same decile split, same
     // tie-break; the unchanged SQL-ntile oracle hash-gates that).
+    // The plan is the range exchange, one broadcast join of the
+    // driver's per-partition prefix offsets and the final group-by,
+    // with no single-key sort anywhere.
     "window_ntile" -> ((s, d) => {
       // rank on the ROUNDED price (what the output carries) so the
       // decile boundaries are engine-independent at ties
@@ -388,7 +391,10 @@ object RelationalQueries {
         .orderBy(col("nationkey"))
     }),
 
-    // Top-3 orders per priority class via rank.
+    // Top-3 orders per priority class via rank. Kept on the plain
+    // window by design: with rk <= 3 Spark plants map-side and
+    // reduce-side WindowGroupLimit, so every scan task pre-prunes to 3
+    // rows per priority before the final sort sees anything.
     "topk_group" -> ((s, d) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))

@@ -184,6 +184,8 @@ object SourceQueries {
     // nation -> legacy .xls (OLE2/BIFF8 fixture writer) -> the same
     // Xlsx.read entry point (magic-number dispatch) -> summary. The
     // double column exercises NUMBER records; ints land as RK/MULRK.
+    // The workbook is parsed driver-side, so the plan is the summary
+    // aggregate over a LocalTableScan: one exchange, nothing pushed.
     "src_xls" -> ((s, d) => {
       val dir = tmp("graft_xls")
       val rows = Tables.nation(s, d)
@@ -395,7 +397,9 @@ object SourceQueries {
     // Hamming 3 under the 1.06 brightness scale — the honest
     // perceptual-hash trade; full equality would overclaim).
     // n_planted is SQL-derivable; edge-level semantics stay pinned by
-    // ImagesSpec/StarAb.
+    // ImagesSpec/StarAb. Image bytes never enter an exchange: decode
+    // runs once into a persisted skinny (id, dHash) frame, and the band
+    // join runs over DISTINCT signatures only.
     "mm_phash_dedup" -> ((s, d) => {
       import s.implicits._
       // media-taking convenience form: its internally-persisted feats

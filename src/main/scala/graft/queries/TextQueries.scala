@@ -92,6 +92,8 @@ object TextQueries {
     // two-pass offset kernel (no per-shard window funnel); the oracle
     // replays the identical semantics as a row_number window, so the
     // kernel's distributed numbering is hash-verified row-for-row.
+    // The plan is ONE range exchange on (shard, key, id) with an
+    // intra-partition sort; the numbering runs in row-local passes.
     "corpus_shard_shuffle" -> ((s, d) => {
       graft.operators.Sharding.deterministicShards(
           Tables.documents(s, d), "doc_id")
@@ -104,6 +106,7 @@ object TextQueries {
     // easy -> hard. Rank comes from the two-pass offset kernel (no
     // single-reducer window funnel); the oracle replays the whole
     // table as a row_number window, hash-verified row-for-row.
+    // The plan is ONE range exchange with an intra-partition sort.
     "mix_curriculum" -> ((s, d) => {
       val scored = Tables.documents(s, d)
         .filter(col("text").isNotNull)
@@ -372,6 +375,10 @@ object TextQueries {
     // corpus-repeated 3-gram (df >= 5 distinct docs) is REMOVED from
     // every document — the span-level complement of doc-level dedup.
     // The oracle verifies each doc's full cleaned text, not a score.
+    // Plan: one shuffle mining the df set, the mined set joined back
+    // over the positional shingles (broadcast below
+    // TextFilters.useMinedBroadcast's ceiling, a shuffle join above),
+    // one shuffle of the covered positions and one id-keyed join.
     "text_substring_dedup" -> ((s, d) => {
       graft.operators.TextFilters.removeRepeatedSpans(
           Tables.documents(s, d), "doc_id", "text", n = 3, minDf = 5L)

@@ -604,8 +604,8 @@ object StreamIngest {
     * construction and broadcast-reused by every micro-batch, so the
     * per-batch cost is the row-local sketch filter plus one
     * broadcast verify against the corpus scan — no corpus or batch
-    * shuffle, the plan audited under `dedup_incremental` in
-    * PLANS.md. Division of labor: within-stream exact dups are
+    * shuffle, the plan described at the `dedup_incremental` query.
+    * Division of labor: within-stream exact dups are
     * [[dedupWithinWatermark]]'s job (bounded state), within-stream
     * NEAR-dups [[minhashDedupSink]]'s (durable store); this gate
     * holds the line against the immutable already-published corpus.

@@ -49,7 +49,7 @@ class GatedJoinSpec extends SparkSpec {
     * repartitions (REPARTITION_BY_NUM/COL — e.g. Dedup.spread's
     * size-gated small-input widening, which the stats gate skips for
     * any corpus bigger than cores x maxPartitionBytes) are intent,
-    * audited in PlanAudit, not leaks.
+    * pinned by the plan fingerprints, not leaks.
     */
   private def corpusRowExchanges(df: DataFrame, frag: String): Seq[SparkPlan] =
     PlanHash.nonAdaptivePlan(df).collect {

@@ -16,6 +16,14 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(unknown.isEmpty, s"oracles without queries: $unknown")
   }
 
+  test("roster: no names is every query sorted, names keep their order once, unknown names fail") {
+    assert(SparkEntry.roster(Nil) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.roster(Seq("q3_topn", "q1_agg", "q3_topn")) == Seq("q3_topn", "q1_agg"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.roster(Seq("q1_agg", "nope", "nah")))
+    assert(e.getMessage.contains("unknown queries: nope, nah"))
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001 and is non-empty") {
       val df = fn(spark, sf0001)

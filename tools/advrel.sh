@@ -18,14 +18,13 @@ q17_scalar q18_bigcust q19_disjunct q21_late_supplier q22_idle_rich \
 agg_grouping_sets window_range_frame q2_min_cost_supp q7_volume \
 q8_market_share q9_profit q10_returns q11_share_threshold q13_order_dist \
 q14_promo_share q15_top_supplier q16_supplier_count q20_qty_surplus q12_shipmode"
-export SPARK_GRAFT_VERIFY_QUERIES=$(echo $REL | tr ' ' ',')
 tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel 2>/dev/null | tail -1
 tools/runmain.sh graft.R15AdversarialRelGen testdata-advrel-empty empty 2>/dev/null | tail -1
 echo "== hostile rung =="
-tools/runmain.sh graft.Verify testdata-advrel /tmp/advrel_out \
+tools/runmain.sh graft.Verify testdata-advrel /tmp/advrel_out $REL \
   2>&1 | grep -E "\[verify\].*failed" || true
 python3 tools/compare.py testdata-advrel /tmp/advrel_out $REL | grep -E "^FAIL|== "
 echo "== empty-facts rung =="
-tools/runmain.sh graft.Verify testdata-advrel-empty /tmp/advrel_empty_out \
+tools/runmain.sh graft.Verify testdata-advrel-empty /tmp/advrel_empty_out $REL \
   2>&1 | grep -E "\[verify\].*failed" || true
 python3 tools/compare.py testdata-advrel-empty /tmp/advrel_empty_out $REL | grep -E "^FAIL|== "

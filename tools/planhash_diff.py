@@ -9,26 +9,39 @@ of regression (the R11Probe3 leftover-exchange bug, the vacuous
 q15/q16/q22 canaries) was previously caught only by hand probes.
 
 Usage:
-  planhash_diff.py <baseline.json> <new.json> [query ...]
-  planhash_diff.py --update <baseline.json> <new.json>
+  planhash_diff.py <sfDir> <new.json> [query ...]
+  planhash_diff.py --update <sfDir> <new.json>
 
-Without --update: exits 1 listing drifted/new/missing queries. If the
-plan change is INTENTIONAL, re-run with --update to refresh the
-baseline, and record why in PLANS.md — the baseline refresh without a
-PLANS.md rationale is exactly what the judge's gate flags.
+The baseline is the committed PLAN_HASHES*.json of the rung named by
+sfDir's last path component (BASELINES below); a rung without one is
+reported on one line and passes. Without --update: exits 1 listing
+drifted/new/missing queries. If the plan change is INTENTIONAL, re-run
+with --update to refresh the baseline, and record why in PLANS.md.
 With [query ...] only those queries are compared (subset iteration);
 new/missing bookkeeping is skipped because a subset run dumps only
 its own hashes.
 """
-import sys, json
+import sys, json, os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Broadcast decisions legitimately differ across scales, so each
+# measured rung carries its own committed baseline.
+BASELINES = {"sf0.01": "PLAN_HASHES.json",
+             "sf0.1": "PLAN_HASHES_sf0.1.json",
+             "testdata-sf10": "PLAN_HASHES_sf10.json"}
 
 def main():
     args = sys.argv[1:]
     update = args and args[0] == "--update"
     if update:
         args = args[1:]
-    baseline_path, new_path = args[0], args[1]
+    sf_dir, new_path = args[0], args[1]
     only = set(args[2:])
+    rung = os.path.basename(sf_dir.rstrip("/"))
+    if rung not in BASELINES:
+        print(f"== plan gate: rung {rung!r} has no committed baseline ==")
+        return 1 if update else 0
+    baseline_path = os.path.join(ROOT, BASELINES[rung])
     with open(new_path) as f:
         new = json.load(f)
     try:
@@ -63,7 +76,7 @@ def main():
         print(f"== plan gate: {len(drifted)} drifted, {len(added)} new, "
               f"{len(missing)} missing ==")
         print("If intentional: tools/planhash_diff.py --update "
-              f"{baseline_path} {new_path}  AND record why in PLANS.md")
+              f"{sf_dir} {new_path}  AND record why in PLANS.md")
         return 1
     n = len([k for k in new if not only or k in only])
     print(f"== plan gate: {n} fingerprints match baseline ==")

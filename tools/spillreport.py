@@ -34,12 +34,12 @@ def main():
     art = {
         "rung": "forced-spill correctness gate",
         "config": {
-            "sf_dir": "/root/repo/testdata-sf10",
+            "sf_dir": "testdata-sf10",
             "master": "local-cluster[4,8,4096]",
             "memory_fraction": 0.12,
             "shuffle_partitions": 8,
             "resilience": "task.maxFailures=8 + stage-level executor "
-                          "exclusion (Verify enables under "
+                          "exclusion (GraftSession enables under "
                           "SPARK_GRAFT_MEMORY_FRACTION)",
             "note": note,
         },
@@ -62,7 +62,14 @@ def main():
         },
     }
     json.dump(art, open(out_json, "w"), indent=1)
-    print(json.dumps(art["gate"]) )
+    print(json.dumps(art["gate"]))
+    sp = art["spill"]
+    print(f"== spill summary: total_disk={sp['total_disk_bytes']} "
+          f"total_mem={sp['total_mem_bytes']} "
+          f"queries_with_disk_spill={len(spilled)}/{len(m)} ==")
+    for f, (d, mm, n) in sorted(fam.items(), key=lambda kv: -kv[1][0]):
+        if d > 0:
+            print(f"  family {f:<12} disk={d:>12} mem={mm:>13} ({n} queries)")
     print("spilling queries:", ",".join(q for q, _ in spilled))
 
 if __name__ == "__main__":

@@ -29,8 +29,10 @@
 #
 # Usage: tools/spillverify.sh [outDir]
 # Expect: crossrung summary "== 162 pass, 0 fail ..." and the
-# spill-family summary listing nonzero disk spill for join/agg/window.
-set -e
+# spill-family summary listing nonzero disk spill for join/agg/window;
+# outDir keeps the crossrung log and spillreport.py's record
+# (spill_verify.json, the SPILL_VERIFY artifact).
+set -e -o pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/verify_spill_sf10}
 rm -rf "$OUT"
@@ -38,23 +40,9 @@ SPARK_GRAFT_MEMORY_FRACTION=0.12 SPARK_DRIVER_MEM=8g \
   SPARK_GRAFT_MASTER='local-cluster[4,8,4096]' \
   SPARK_GRAFT_SHUFFLE_PARTITIONS=8 \
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
-  tools/runmain.sh graft.Verify /root/repo/testdata-sf10 "$OUT" \
+  tools/runmain.sh graft.Verify testdata-sf10 "$OUT" \
   2>&1 | grep -E "\[verify\].*failed" || true
-python3 tools/crossrung_compare.py /root/repo/testdata-sf10 "$OUT" 900
-python3 - "$OUT" <<'EOF'
-import json, sys, collections
-m = json.load(open(sys.argv[1] + "/spill_metrics.json"))
-fam = collections.defaultdict(lambda: [0, 0, 0])
-for q, v in m.items():
-    f = q.split("_")[0]
-    fam[f][0] += v["disk_spill"]; fam[f][1] += v["mem_spill"]
-    fam[f][2] += 1
-tot_d = sum(v["disk_spill"] for v in m.values())
-tot_m = sum(v["mem_spill"] for v in m.values())
-n_spilled = sum(1 for v in m.values() if v["disk_spill"] > 0)
-print(f"== spill summary: total_disk={tot_d} total_mem={tot_m} "
-      f"queries_with_disk_spill={n_spilled}/{len(m)} ==")
-for f, (d, mm, n) in sorted(fam.items(), key=lambda kv: -kv[1][0]):
-    if d > 0:
-        print(f"  family {f:<12} disk={d:>12} mem={mm:>13} ({n} queries)")
-EOF
+python3 tools/crossrung_compare.py testdata-sf10 "$OUT" 900 \
+  | tee "$OUT/crossrung.log" && rc=0 || rc=$?
+python3 tools/spillreport.py "$OUT" "$OUT/crossrung.log" "$OUT/spill_verify.json"
+exit $rc
