@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import scala.collection.immutable.SortedMap
+import scala.collection.immutable.{ListMap, SortedMap}
 
 /** Concurrent multi-query contract (round 14, follow-on to the
   * redundant-execution determinism axis): a deployed engine is SHARED
@@ -101,17 +101,7 @@ object R14Concurrent {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
         var name = queue.poll()
         while (name != null) {
-          val v =
-            try {
-              val (n, h) = R14Determinism.contentHash(
-                SparkEntry.queries(name)(spark, sfDir))
-              s"$n:$h"
-            } catch {
-              case e: Throwable => s"ERR:${e.getClass.getSimpleName}:" +
-                String.valueOf(e.getMessage).take(120)
-                  .replaceAll("[\\r\\n\"]", " ")
-            }
-          out(name, v)
+          out(name, R14Determinism.runAndHash(spark, sfDir, name))
           name = queue.poll()
         }
       })
@@ -143,17 +133,7 @@ object R14Concurrent {
           val t = new Thread(() => {
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"d$i")
             gate.await()
-            val v =
-              try {
-                val (n, h) = R14Determinism.contentHash(
-                  SparkEntry.queries(name)(spark, sfDir))
-                s"$n:$h"
-              } catch {
-                case e: Throwable => s"ERR:${e.getClass.getSimpleName}:" +
-                  String.valueOf(e.getMessage).take(120)
-                    .replaceAll("[\\r\\n\"]", " ")
-              }
-            results.add(v)
+            results.add(R14Determinism.runAndHash(spark, sfDir, name))
           })
           t.setDaemon(true)
           t.start()
@@ -174,21 +154,16 @@ object R14Concurrent {
     val errors = concurrentHashes.collect {
       case (n, v) if v.startsWith("ERR:") => s"concurrent/$n=$v" }.toSeq ++
       dupDiverged.filter(_.contains("=ERR:")).map(d => s"duplicate/$d")
-    def q(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
     val pass = diverged.isEmpty && dupDiverged.isEmpty
-    val json =
-      s"""{"metric":"concurrency","sf":${q(sfDir)},""" +
-      s""""n_queries":${roster.size},"threads":$nThreads,"dup_n":$dupN,""" +
-      s""""serial_sec":${f"$serialSec%.1f"},""" +
-      s""""concurrent_sec":${f"$concSec%.1f"},""" +
-      s""""speedup":${f"${serialSec / concSec}%.2f"},""" +
-      s""""duplicate_sec":${f"$dupSec%.1f"},""" +
-      s""""n_suspects":${suspects.size},""" +
-      s""""diverged":${diverged.map(q).mkString("[", ",", "]")},""" +
-      s""""dup_diverged":${dupDiverged.map(q).mkString("[", ",", "]")},""" +
-      s""""errors":${errors.map(q).mkString("[", ",", "]")},""" +
-      s""""pass":$pass}"""
+    def r(x: Double, scale: Double) = math.round(x * scale) / scale
+    val json = Bench.mapper.writeValueAsString(ListMap(
+      "metric" -> "concurrency", "sf" -> sfDir,
+      "n_queries" -> roster.size, "threads" -> nThreads, "dup_n" -> dupN,
+      "serial_sec" -> r(serialSec, 10), "concurrent_sec" -> r(concSec, 10),
+      "speedup" -> r(serialSec / concSec, 100),
+      "duplicate_sec" -> r(dupSec, 10), "n_suspects" -> suspects.size,
+      "diverged" -> diverged, "dup_diverged" -> dupDiverged.toSeq,
+      "errors" -> errors, "pass" -> pass))
     println(json)
     spark.stop()
     if (!pass) sys.exit(1)

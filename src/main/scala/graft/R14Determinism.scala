@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.immutable.SortedMap
+import scala.collection.immutable.{ListMap, SortedMap}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerSpeculativeTaskSubmitted, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -101,26 +101,27 @@ object R14Determinism {
     (rows.length.toLong, md.digest().map(b => f"$b%02x").mkString)
   }
 
-  /** Run every roster query and fingerprint it; a query that throws
-    * records ERR:<class> instead of aborting the sweep. Same per-query
-    * cache discipline as Verify. */
-  def runRoster(spark: SparkSession, sfDir: String,
-      roster: Seq[String]): SortedMap[String, String] = {
-    var out = SortedMap.empty[String, String]
-    roster.foreach { name =>
-      val v =
-        try {
-          val (n, h) = contentHash(SparkEntry.queries(name)(spark, sfDir))
-          s"$n:$h"
-        } catch {
-          case e: Throwable => s"ERR:${e.getClass.getSimpleName}:" +
-            String.valueOf(e.getMessage).take(120).replaceAll("[\\r\\n\"]", " ")
-        }
-      out += name -> v
-      spark.catalog.clearCache()
+  /** One query's fingerprint as "rows:sha256", or ERR:<class>:<msg>
+    * when it throws — a failing query is recorded, not fatal to the
+    * sweep. */
+  def runAndHash(spark: SparkSession, sfDir: String, name: String): String =
+    try {
+      val (n, h) = contentHash(SparkEntry.queries(name)(spark, sfDir))
+      s"$n:$h"
+    } catch {
+      case e: Throwable => s"ERR:${e.getClass.getSimpleName}:" +
+        String.valueOf(e.getMessage).take(120).replaceAll("[\\r\\n\"]", " ")
     }
-    out
-  }
+
+  /** Run every roster query and fingerprint it ([[runAndHash]]). Same
+    * per-query cache discipline as Verify. */
+  def runRoster(spark: SparkSession, sfDir: String,
+      roster: Seq[String]): SortedMap[String, String] =
+    roster.foldLeft(SortedMap.empty[String, String]) { (out, name) =>
+      val v = runAndHash(spark, sfDir, name)
+      spark.catalog.clearCache()
+      out + (name -> v)
+    }
 
   /** Forced speculation under real executor JVMs: quantile 0 and
     * multiplier 1 mark every task past the median as a straggler; the
@@ -230,10 +231,8 @@ object R14Determinism {
 
     // ---- compare everything to the baseline ----
     val base = configs(baseKey)
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val diverged = configs.toSeq.drop(1).map { case (cfg, m) =>
-      val bad = roster.filter(n => m(n) != base(n))
-      cfg -> bad
+      cfg -> roster.filter(n => m(n) != base(n))
     }
     val errors = configs.toSeq.flatMap { case (cfg, m) =>
       m.collect { case (n, v) if v.startsWith("ERR:") => s"$cfg/$n=$v" }
@@ -244,23 +243,20 @@ object R14Determinism {
       (!modes("speculation") || speculativeMarked.get() > 0) &&
       (!(modes("speculation") && modes("clusterchaos")) ||
         clusterRetryStats._2 > 0)
-    val detail = diverged.map { case (cfg, bad) =>
-      q(cfg) + ":" + bad.map(n =>
-        s"{${q(n)}:{${q("base")}:${q(base(n))},${q("got")}:${q(configs(cfg)(n))}}}")
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"determinism","sf":${q(sfDir)},"n_queries":${roster.size},""" +
-      s""""configs":${configs.keys.map(q).mkString("[", ",", "]")},""" +
-      s""""diverged":$detail,"n_diverged":$nDiverged,""" +
-      s""""errors":${errors.map(q).mkString("[", ",", "]")},""" +
-      s""""retry_requested":${retryStats._1},"retry_landed":${retryStats._2},""" +
-      s""""cluster_kills_requested":${clusterRetryStats._1},""" +
-      s""""cluster_kills_landed":${clusterRetryStats._2},""" +
-      s""""speculative_marked":${speculativeMarked.get()},""" +
-      s""""speculative_launched":${speculativeLaunched.get()},""" +
-      s""""walls_sec":${walls.map { case (k, v) => q(k) + ":" + v }
-           .mkString("{", ",", "}")},"pass":$pass}"""
+    val detail = ListMap(diverged.map { case (cfg, bad) =>
+      cfg -> bad.map(n =>
+        ListMap(n -> ListMap("base" -> base(n), "got" -> configs(cfg)(n))))
+    }: _*)
+    val json = Bench.mapper.writeValueAsString(ListMap(
+      "metric" -> "determinism", "sf" -> sfDir, "n_queries" -> roster.size,
+      "configs" -> configs.keys.toSeq, "diverged" -> detail,
+      "n_diverged" -> nDiverged, "errors" -> errors,
+      "retry_requested" -> retryStats._1, "retry_landed" -> retryStats._2,
+      "cluster_kills_requested" -> clusterRetryStats._1,
+      "cluster_kills_landed" -> clusterRetryStats._2,
+      "speculative_marked" -> speculativeMarked.get(),
+      "speculative_launched" -> speculativeLaunched.get(),
+      "walls_sec" -> ListMap(walls.toSeq: _*), "pass" -> pass))
     println(json)
     if (!pass) sys.exit(1)
   }

@@ -53,7 +53,7 @@ object Dedup {
     *
     * Scale shape: one map-side-combined groupBy(fp) — NOT a window
     * over fp, which would funnel a million-copy clump through one
-    * task — then one fp-keyed join back whose strategy is GATED
+    * task — then one fp-keyed join back whose shape is GATED
     * ([[TextFilters.useMinedBroadcast]] on the corpus: the group
     * frame is one row per distinct fingerprint, corpus-mined and
     * unbounded by contract). Below the ceiling the group frame
@@ -66,8 +66,7 @@ object Dedup {
     * shuffle join where AQE's skew split engages once the clump
     * partition crosses the skew threshold.
     */
-  def softWeights(docs: DataFrame, idCol: String, textCol: String,
-                  strategy: String = "auto"): DataFrame = {
+  def softWeights(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val keyed = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), T.fingerprint(col(textCol)).as("fp"))
     val groups = keyed.groupBy(col("fp"))
@@ -77,7 +76,7 @@ object Dedup {
     // ~one 48-byte row per corpus row, so the ceiling must stay within
     // a few broadcast thresholds of the corpus bytes themselves
     val hinted =
-      if (TextFilters.useMinedBroadcast(docs, strategy, factor = 4))
+      if (TextFilters.useMinedBroadcast(docs, factor = 4))
         broadcast(groups)
       else groups
     keyed.join(hinted, Seq("fp"))
@@ -114,72 +113,61 @@ object Dedup {
     * per ingest epoch and reuses it across batches (the query layer
     * memoizes it per corpus dir, the ANN-index discipline); size the
     * sketch via `expectedItems`/`fpp` — 10^9 items at 1% fpp is
-    * ~1.2 GB, the practical broadcast ceiling, beyond which
-    * [[incrementalNewSharded]] shards the sketch by fingerprint
-    * prefix (implemented r10; spec-pinned identical to this path).
+    * ~1.2 GB, the practical broadcast ceiling.
     *
     * Intra-batch duplicates are NOT collapsed (both copies of a new
     * text are returned): batch-internal dedup is [[exact]]'s job and
     * composes BEFORE this pass, mirroring the reference's
     * dedup-then-append ingest ordering.
     *
-    * `strategy`: "join" is the plain fingerprint anti-join (Catalyst
-    * broadcasts the corpus side when it fits — the fastest form for
-    * any corpus that CAN broadcast); "bloom" is the sketch path
-    * above; "auto" (default) picks by the corpus's plan-stats size.
-    * Both return identical rows (spec-pinned); the measured
-    * crossover is in SCALING.md.
+    * A corpus within [[TextFilters.useMinedBroadcast]]'s ceiling at
+    * factor 64 takes the plain fingerprint anti-join instead (Catalyst
+    * broadcasts it), a larger one the bloom path above
+    * ([[incrementalNewBloom]]) — identical rows (spec-pinned).
     *
     * Output: (idCol, fp) per surviving batch row.
     */
   def incrementalNew(corpus: DataFrame, batch: DataFrame,
                      idCol: String, textCol: String,
                      expectedItems: Long = 1L << 20,
-                     fpp: Double = 0.01,
-                     strategy: String = "auto"): DataFrame = {
-    val spark = batch.sparkSession
+                     fpp: Double = 0.01): DataFrame = {
+    // measured in SCALING.md (graft.IncrAb): at 250 k docs the plain
+    // anti-join beats the bloom path 2.2 s to 5.4 s — small corpora
+    // shuffle (or broadcast) for free and the prefilter's extra stages
+    // are the whole bill. The bloom path exists for the corpus that
+    // can NEITHER broadcast its fp set nor afford a corpus-wide
+    // exchange; its sketch is ~10 bits/doc vs ~50 B/doc for a
+    // broadcast fp set. Raw text bytes >> fp bytes, so corpora under
+    // 64x the broadcast threshold keep the join form — Catalyst turns
+    // it into a broadcast anti-join well before that line.
+    if (TextFilters.useMinedBroadcast(corpus, factor = 64))
+      batch.filter(col(textCol).isNotNull)
+        .select(col(idCol), T.fingerprint(col(textCol)).as("fp"))
+        .join(corpus.filter(col(textCol).isNotNull)
+          .select(T.fingerprint(col(textCol)).as("fp")).distinct(),
+          Seq("fp"), "left_anti")
+        .select(col(idCol), col("fp"))
+    else incrementalNewBloom(corpus, batch, idCol, textCol, expectedItems, fpp)
+  }
+
+  /** [[incrementalNew]]'s bloom path at any corpus size: the corpus
+    * sketch prefilter, the broadcast verify of the surviving
+    * candidates against the corpus scan, and the row-local anti filter
+    * of the batch. Same rows as [[incrementalNew]]; neither side ever
+    * rides a shuffle.
+    */
+  def incrementalNewBloom(corpus: DataFrame, batch: DataFrame,
+                          idCol: String, textCol: String,
+                          expectedItems: Long = 1L << 20,
+                          fpp: Double = 0.01): DataFrame = {
     val batchFp = batch.filter(col(textCol).isNotNull)
       .select(col(idCol), T.fingerprint(col(textCol)).as("fp"))
-    val corpusFp = corpus.filter(col(textCol).isNotNull)
-      .select(T.fingerprint(col(textCol)).as("fp"))
-    // strategy selection, measured in SCALING.md (graft.IncrAb): at
-    // 250 k docs the plain anti-join beats the bloom path 2.2 s to
-    // 5.4 s — small corpora shuffle (or broadcast) for free and the
-    // prefilter's extra stages are the whole bill. The bloom path
-    // exists for the corpus that can NEITHER broadcast its fp set
-    // nor afford a corpus-wide exchange; its sketch is ~10 bits/doc
-    // vs ~50 B/doc for a broadcast fp set. "auto" picks by the
-    // corpus's plan-stats size (the spread() precedent): raw text
-    // bytes >> fp bytes, so corpora under 64x the broadcast
-    // threshold keep the join form — Catalyst turns it into a
-    // broadcast anti-join well before that line.
-    val useBloom = strategy match {
-      case "bloom" => true
-      case "join" => false
-      case "auto" =>
-        val bytes = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-        val t = spark.sessionState.conf.autoBroadcastJoinThreshold
-        // broadcast disabled (-1) leaves no session line to scale from;
-        // a fixed cutoff keeps the decision size-driven — the old
-        // `threshold >= 0 &&` guard forced the plain corpus-wide
-        // anti-join for EVERY size, i.e. defeated the bloom path at
-        // exactly the scale it exists for (r9 advice)
-        val ceiling = if (t >= 0) BigInt(t) * 64 else BigInt(640L << 20)
-        bytes > ceiling
-      case other => throw new IllegalArgumentException(
-        s"strategy must be auto|bloom|join: $other")
-    }
-    if (!useBloom)
-      batchFp.join(corpusFp.distinct(), Seq("fp"), "left_anti")
-        .select(col(idCol), col("fp"))
-    else {
-      val bc = spark.sparkContext.broadcast(
-        corpusSketch(corpus, textCol, expectedItems, fpp))
-      val matched = matchedFingerprints(corpus, textCol,
-        batchFp.select(col("fp")), bc)
-      batchFp.join(broadcast(matched), Seq("fp"), "left_anti")
-        .select(col(idCol), col("fp"))
-    }
+    val bc = batch.sparkSession.sparkContext.broadcast(
+      corpusSketch(corpus, textCol, expectedItems, fpp))
+    val matched = matchedFingerprints(corpus, textCol,
+      batchFp.select(col("fp")), bc)
+    batchFp.join(broadcast(matched), Seq("fp"), "left_anti")
+      .select(col(idCol), col("fp"))
   }
 
   /** The [[incrementalNew]] prefilter sketch as a standalone
@@ -197,125 +185,6 @@ object Dedup {
     corpus.filter(col(textCol).isNotNull)
       .select(T.fingerprint(col(textCol)).as("fp"))
       .stat.bloomFilter("fp", expectedItems, fpp)
-  }
-
-  /** Shard index of a fingerprint: first 4 hex chars (md5 output is
-    * uniform, so shards balance) mod `shards`. One definition shared
-    * by the sharded build and probe — the dispatch must agree or a
-    * fingerprint would probe a sketch it was never inserted into.
-    */
-  private[operators] def shardOfFp(fp: String, shards: Int): Int =
-    (Integer.parseInt(fp.substring(0, 4), 16) % shards + shards) % shards
-
-  /** Prefix-SHARDED corpus sketch — the [[corpusSketch]] escape hatch
-    * for corpora past the single-broadcast ceiling (~1.2 GB at 10^9
-    * docs / 1% fpp): N independent Bloom filters, shard i covering
-    * the fingerprints [[shardOfFp]] maps to i, each broadcast
-    * SEPARATELY. Two ceilings fall at once:
-    *  - no single broadcast value approaches the torrent/driver
-    *    limits (16 shards at 10^9 docs ≈ 75 MB each);
-    *  - a probe task repartitioned by shard touches ONE shard's
-    *    broadcast (`Broadcast.value` fetches lazily per object), so
-    *    executor-resident sketch bytes are total/shards per task, not
-    *    the full sketch — the property that lets the sketch keep
-    *    growing with the corpus.
-    * Build cost: the one-per-epoch pass shuffles the FP COLUMN ONLY
-    * (16 B/doc of md5 hex vs the corpus's raw text) so each shard's
-    * filter is assembled in exactly one task; absent shards (tiny
-    * corpora) come back as empty filters. No false negatives per
-    * shard, same as the single sketch.
-    */
-  def corpusSketchSharded(corpus: DataFrame, textCol: String, shards: Int,
-                          expectedItems: Long = 1L << 20, fpp: Double = 0.01)
-      : IndexedSeq[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter]] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    require(shards >= 1 && shards <= 4096, s"shards must be in [1, 4096]: $shards")
-    require(expectedItems > 0, s"expectedItems must be > 0: $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1): $fpp")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val perShard = math.max(16L, expectedItems / shards)
-    val shardU = udf((fp: String) => shardOfFp(fp, shards))
-    val built = corpus.filter(col(textCol).isNotNull)
-      .select(T.fingerprint(col(textCol)).as("fp"))
-      .filter(col("fp").isNotNull)
-      .withColumn("sh", shardU(col("fp")))
-      // hash repartitioning is total per key: every row of shard i
-      // lands in one partition, so each filter is built whole in one
-      // task (a shard never needs a merge)
-      .repartition(shards, col("sh"))
-      .select(col("sh"), col("fp")).as[(Int, String)]
-      .mapPartitions { rows =>
-        val filters = scala.collection.mutable.Map.empty[Int, BloomFilter]
-        rows.foreach { case (sh, fp) =>
-          filters.getOrElseUpdate(sh, BloomFilter.create(perShard, fpp))
-            .putString(fp)
-        }
-        filters.iterator.map { case (sh, bf) =>
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          (sh, bos.toByteArray)
-        }
-      }
-      .collect().toMap
-    IndexedSeq.tabulate(shards) { i =>
-      val bf = built.get(i) match {
-        case Some(bytes) =>
-          BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-        case None => BloomFilter.create(perShard, fpp)
-      }
-      spark.sparkContext.broadcast(bf)
-    }
-  }
-
-  /** [[incrementalNew]]'s bloom path against a prefix-sharded sketch
-    * — the form for corpora whose single sketch would not broadcast.
-    * Identical rows to [[incrementalNew]] (spec-pinned); the only
-    * plan difference is ONE batch-sized shuffle keying the batch
-    * fingerprints to their shard so each probe task resolves exactly
-    * one shard's broadcast. The corpus is still scanned, never
-    * shuffled.
-    */
-  def incrementalNewSharded(corpus: DataFrame, batch: DataFrame,
-                            idCol: String, textCol: String, shards: Int,
-                            expectedItems: Long = 1L << 20,
-                            fpp: Double = 0.01): DataFrame = {
-    val sketches = corpusSketchSharded(corpus, textCol, shards,
-      expectedItems, fpp)
-    val batchFp = batch.filter(col(textCol).isNotNull)
-      .select(col(idCol), T.fingerprint(col(textCol)).as("fp"))
-    val matched = matchedFingerprintsSharded(corpus, textCol,
-      batchFp.select(col("fp")), sketches, shards)
-    batchFp.join(broadcast(matched), Seq("fp"), "left_anti")
-      .select(col(idCol), col("fp"))
-  }
-
-  /** [[matchedFingerprints]] with shard dispatch: `fps` repartitions
-    * by [[shardOfFp]] (a batch-sized shuffle) so each task's rows
-    * probe ONE shard broadcast; candidates then verify against the
-    * corpus scan exactly like the single-sketch path.
-    */
-  def matchedFingerprintsSharded(corpus: DataFrame, textCol: String,
-                                 fps: DataFrame,
-                                 sketches: IndexedSeq[
-                                   org.apache.spark.broadcast.Broadcast[
-                                     org.apache.spark.util.sketch.BloomFilter]],
-                                 shards: Int): DataFrame = {
-    require(sketches.length == shards,
-      s"sketch count ${sketches.length} != shards $shards")
-    val shardU = udf((fp: String) => shardOfFp(fp, shards))
-    val mightContain = udf((fp: String, sh: Int) =>
-      sketches(sh).value.mightContainString(fp))
-    val candidates = fps.filter(col("fp").isNotNull)
-      .withColumn("sh", shardU(col("fp")))
-      .repartition(shards, col("sh"))
-      .filter(mightContain(col("fp"), col("sh")))
-      .select(col("fp")).distinct()
-    corpus.filter(col(textCol).isNotNull)
-      .select(T.fingerprint(col(textCol)).as("fp"))
-      .join(broadcast(candidates), Seq("fp"))
-      .select(col("fp")).distinct()
   }
 
   /** Which of `fps` (a single-column frame named `fp`) REALLY exist
@@ -380,15 +249,14 @@ object Dedup {
       idCol: String, textCol: String,
       perms: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       minJaccard: Double = 0.8,
-      corpusBanded: Option[DataFrame] = None,
-      strategy: String = "auto"): DataFrame = {
+      corpusBanded: Option[DataFrame] = None): DataFrame = {
     // ONE gate decision covers every batch-derived frame below: the
     // candidate-id sets and the near-dup id set all scale with batch
     // size (times collision density), so when the batch is too big
     // to broadcast its band rows, force-broadcasting its derivatives
     // would OOM the same way — above the ceiling they all join
     // unhinted and Catalyst plans from stats (r10 review).
-    val small = TextFilters.useMinedBroadcast(batch, strategy)
+    val small = TextFilters.useMinedBroadcast(batch)
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val cb = corpusBanded
       .getOrElse(bandedSignatures(corpus, idCol, textCol, perms, bands,
@@ -819,57 +687,27 @@ object Dedup {
     * — the dominant reliable-mode cost, priced in SCALING.md — is
     * paid once per k rounds.
     *
-    * `strategy` is the same measured-crossover discipline as the
-    * incremental dedup's broadcast-vs-bloom switch: `"auto"`
-    * (default) runs the distributed star loop UNLESS the normalized
-    * edge set is at most `localEdgeThreshold` rows with long ids, in
-    * which case the graph fits on the driver the same way a broadcast
-    * dimension fits on an executor — ONE job materializes the
-    * deduped edge checkpoint, the driver union-finds it in
-    * O(E α(E)), and the labels come back as a LocalRelation while they
-    * are broadcast-dim-sized (accurate stats, so [[resolve]]'s
-    * broadcast gate keeps firing; the build side needs no job at all)
-    * or as a parallelized RDD past ~200k rows (plan-embedding millions
-    * of label rows taxes every consumer's analysis/serialization).
-    * Driver memory at the default threshold: ~40 MB of specialized
-    * edge tuples + ~50 MB of union-find state — the broadcast-dim
-    * class, honestly counted with JVM object headers. A components run is ~10 Spark jobs of
-    * per-round fixed cost; below the threshold the driver path
-    * replaces them with one, which at gate scale is most of the wall
-    * of every resolve-consuming query (priced in R14StratAb /
-    * SCALING). `"loop"` forces the star loop (the 100 TB path — a
-    * corpus-scale dup graph is billions of edges and NEVER fits the
-    * driver; also what the fault/interval specs pin), `"local"`
-    * forces the driver path (caller owns the memory claim; long ids
-    * required). The label table is IDENTICAL either way — component
-    * minima — spec-pinned across strategies in DedupSpec.
+    * The graph is union-found on the driver ([[componentsLocal]]: one
+    * job instead of ~10 per-round jobs, ~90 MB of driver state at the
+    * default) when its ids are long and its normalized edge set has at
+    * most `localEdgeThreshold` rows, and runs the distributed star
+    * loop otherwise — identical labels either way (spec-pinned).
     */
   def components(pairs: DataFrame, maxIter: Int = 20,
                  checkpointDir: Option[String] = None,
                  checkpointInterval: Int = 1,
-                 strategy: String = "auto",
                  localEdgeThreshold: Long = 1000000L): DataFrame = {
-    require(Set("auto", "local", "loop")(strategy),
-      s"strategy must be auto|local|loop: $strategy")
-    if (strategy == "loop")
-      componentsWithRounds(pairs, maxIter, checkpointDir,
-        checkpointInterval = checkpointInterval)._1
-    else {
-      val spark = pairs.sparkSession
-      val ck = new IterCheckpoint(spark, checkpointDir, checkpointInterval)
-      val initCk = ck(normalizedInit(pairs))
-      val longIds = initCk.schema("u").dataType ==
-        org.apache.spark.sql.types.LongType
-      if (strategy == "local")
-        require(longIds, "strategy=local requires long ids")
-      // the ONE materializing action either way: the count truncates
-      // the checkpoint exactly like the loop's first round would
-      val nEdges = initCk.count()
-      ck.roundDone()
-      if (strategy == "local" || (longIds && nEdges <= localEdgeThreshold))
-        componentsLocal(initCk)
-      else starLoop(initCk, ck, maxIter, _ => ())._1
-    }
+    val spark = pairs.sparkSession
+    val ck = new IterCheckpoint(spark, checkpointDir, checkpointInterval)
+    val initCk = ck(normalizedInit(pairs))
+    val longIds = initCk.schema("u").dataType ==
+      org.apache.spark.sql.types.LongType
+    // the ONE materializing action either way: the count truncates
+    // the checkpoint exactly like the loop's first round would
+    val nEdges = initCk.count()
+    ck.roundDone()
+    if (longIds && nEdges <= localEdgeThreshold) componentsLocal(initCk)
+    else starLoop(initCk, ck, maxIter, _ => ())._1
   }
 
   /** The loop/local-shared edge normalization: one scan of the
@@ -991,7 +829,7 @@ object Dedup {
 
   /** The large-star/small-star alternation over a checkpointed
     * normalized edge frame — shared by [[componentsWithRounds]] and
-    * [[components]]' auto path (which checkpoints + counts the init
+    * [[components]] (which checkpoints + counts the init
     * before deciding, so the loop never re-runs the pair pipeline).
     */
   private def starLoop(initCk: DataFrame, ck: IterCheckpoint,
@@ -1085,8 +923,7 @@ object Dedup {
     * minimum is a groupBy over that same bounded subset. The corpus
     * pays two joins against small, AQE-broadcastable sides.
     */
-  def resolve(docs: DataFrame, pairs: DataFrame, idCol: String,
-              strategy: String = "auto"): DataFrame = {
+  def resolve(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
     val labels = components(pairs)
       .select(col("id").as(idCol), col("label").as("group_label"))
     // gate BOTH joins on the LABELS frame (r11 review): labels is
@@ -1100,7 +937,7 @@ object Dedup {
     // to broadcast). presentMin is a projection of labels' groups,
     // so one decision covers both sides. Above the ceiling: plain
     // joins, AQE skew split past the threshold.
-    val bcast = TextFilters.useMinedBroadcast(labels, strategy, factor = 4)
+    val bcast = TextFilters.useMinedBroadcast(labels, factor = 4)
     def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     val paired = docs.join(hinted(labels), Seq(idCol))
     val presentMin = paired.groupBy(col("group_label"))

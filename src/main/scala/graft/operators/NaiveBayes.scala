@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *  - the model is CORPUS-MINED, so (like the mined-shingle joins in
   *    [[TextFilters]]) its size is not bounded by contract — the
   *    scoring join goes through the same [[TextFilters.useMinedBroadcast]]
-  *    strategy gate: broadcast while the seed corpus bounds the vocab
+  *    size gate: broadcast while the seed corpus bounds the vocab
   *    under the ceiling, plain shuffle join beyond. `minCount` prunes
   *    the hapax tail, which is most of a web corpus's vocabulary;
   *  - scoring is one explode + the gated join + one groupBy(id) —
@@ -93,9 +93,9 @@ object NaiveBayes {
     * unknown-word treatment); callers wanting every input row back
     * left-join this result and coalesce score_e6 to 0.
     *
-    * `strategy` gates how the model joins ("auto"|"broadcast"|
-    * "shuffle" — [[TextFilters.useMinedBroadcast]] on the SEED frame,
-    * whose scan stats bound the mined vocab). `carryCols` ride the
+    * The model broadcasts while the SEED frame, whose scan stats bound
+    * the mined vocab, is within [[TextFilters.useMinedBroadcast]]'s
+    * ceiling, and shuffle-joins above it. `carryCols` ride the
     * per-doc aggregation (they are functionally dependent on the id),
     * so a per-source summary never has to join the corpus-sized
     * score frame back to the corpus just to recover a grouping
@@ -103,10 +103,9 @@ object NaiveBayes {
     */
   def score(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, seed: DataFrame,
-      strategy: String = "auto",
       carryCols: Seq[String] = Nil): DataFrame = {
     val hinted =
-      if (TextFilters.useMinedBroadcast(seed, strategy)) broadcast(model)
+      if (TextFilters.useMinedBroadcast(seed)) broadcast(model)
       else model
     docs
       .filter(col(textCol).isNotNull && length(trim(col(textCol))) > 0)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    groupBy on the shingle (uniform by construction — shingles are
   *    near-unique strings), partial aggregation map-side;
   *  - per-doc joins against a CORPUS-MINED set (frequent/repeated
-  *    shingles) are strategy-adaptive via [[useMinedBroadcast]]:
+  *    shingles) are size-adaptive via [[useMinedBroadcast]]:
   *    broadcast while the corpus bounds the mined set under the
   *    ceiling, plain shuffle join beyond — `df >= minDf` does not
   *    bound the mined set, so an unconditional broadcast would OOM
@@ -39,46 +39,42 @@ object TextFilters {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
 
-  /** Strategy gate for joins against a CORPUS-MINED shingle set (the
-    * [[Dedup.incrementalNew]] plan-stats pattern, r10): `df >= minDf`
-    * does NOT bound the mined set — on a web-scale corpus the
-    * distinct frequent-shingle set can grow past any broadcast
-    * ceiling, so an unconditional broadcast hint is an executor OOM
-    * at exactly the scale the operators exist for. The mined frame
-    * itself has no trustworthy plan-stats line (aggregate estimates
-    * don't model group collapsing), so the gate reads the CORPUS
-    * scan's stats — accurate for file sources — and broadcasts only
-    * while the corpus stays within 32x the session broadcast
-    * threshold (mined shingles are a bounded slice of corpus text:
-    * each mined 3-gram has >= minDf occurrences, so distinct mined
-    * bytes <= corpus shingle bytes / minDf). When broadcasting is
-    * disabled outright (threshold -1) a fixed 256 MB cutoff keeps
-    * the decision scale-driven instead of degenerating to one side.
-    * Above the ceiling the mined side joins as a plain shuffle join —
-    * the corpus pays ONE exchange, only in the regime where the
-    * broadcast would not survive. Both strategies are output-
-    * identical (spec-pinned in TextFiltersSpec).
-    */
-  /** `factor` scales the ceiling per call site (r11 review): the 32x
+  /** The broadcast ceiling for joins against a CORPUS-MINED set (r10):
+    * `df >= minDf` does NOT bound the mined set — on a web-scale
+    * corpus the distinct frequent-shingle set can grow past any
+    * broadcast ceiling, so an unconditional broadcast hint is an
+    * executor OOM at exactly the scale the operators exist for. The
+    * mined frame itself has no trustworthy plan-stats line (aggregate
+    * estimates don't model group collapsing), so the rule reads the
+    * CORPUS scan's stats — accurate for file sources — and
+    * broadcasts only while the corpus stays within `factor` x the
+    * session broadcast threshold. When broadcasting is disabled
+    * outright (threshold -1) a fixed 256 MB x factor / 32 cutoff
+    * keeps the decision scale-driven instead of degenerating to one
+    * side. Above the ceiling the mined side joins as a plain shuffle
+    * join — the corpus pays ONE exchange, only in the regime where
+    * the broadcast would not survive. Both sides are output-identical
+    * (spec-pinned in TextFiltersSpec). Every size-driven
+    * broadcast/bloom choice in the operators goes through this one
+    * rule.
+    *
+    * `factor` scales the ceiling per call site (r11 review): the 32x
     * default is justified ONLY where the mined frame is provably a
-    * 1/minDf slice of the measured frame's bytes; a per-row-derived
-    * frame with NO divisor (one row per distinct fingerprint /
-    * group) must use a tighter factor — its worst case is ~one
-    * short row per measured row, so 32x the threshold of measured
-    * bytes could broadcast several hundred MB.
+    * 1/minDf slice of the measured frame's bytes (each mined 3-gram
+    * has >= minDf occurrences, so distinct mined bytes <= corpus
+    * shingle bytes / minDf); a per-row-derived frame with NO divisor
+    * (one row per distinct fingerprint / group) must use a tighter
+    * factor — its worst case is ~one short row per measured row, so
+    * 32x the threshold of measured bytes could broadcast several
+    * hundred MB.
     */
   private[operators] def useMinedBroadcast(corpus: DataFrame,
-      strategy: String, factor: Int = 32): Boolean = strategy match {
-    case "broadcast" => true
-    case "shuffle" => false
-    case "auto" =>
-      val t = corpus.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      val ceiling =
-        if (t >= 0) BigInt(t) * factor
-        else BigInt(256L << 20) * factor / 32
-      corpus.queryExecution.optimizedPlan.stats.sizeInBytes <= ceiling
-    case other => throw new IllegalArgumentException(
-      s"strategy must be auto|broadcast|shuffle: $other")
+      factor: Int = 32): Boolean = {
+    val t = corpus.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val ceiling =
+      if (t >= 0) BigInt(t) * factor
+      else BigInt(256L << 20) * factor / 32
+    corpus.queryExecution.optimizedPlan.stats.sizeInBytes <= ceiling
   }
 
   private def minedHint(mined: DataFrame, bcast: Boolean): DataFrame =
@@ -93,14 +89,12 @@ object TextFilters {
     *
     * Output: (idCol, n_shingles, n_frequent, boilerplate_frac).
     *
-    * `strategy` ("auto" default) picks the mined-set join shape via
-    * [[useMinedBroadcast]]: broadcast while the corpus is small
-    * enough that the mined set provably fits, plain shuffle join
-    * beyond — identical output either way (spec-pinned).
+    * The mined set broadcasts while `docs` is within
+    * [[useMinedBroadcast]]'s ceiling and shuffle-joins above it.
     */
   def boilerplateFraction(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minDf: Long, strategy: String = "auto"): DataFrame = {
-    val bcast = useMinedBroadcast(docs, strategy)
+      n: Int, minDf: Long): DataFrame = {
+    val bcast = useMinedBroadcast(docs)
     val freq = shingleDocFreq(docs, textCol, n, minDf)
       .select(col("shingle"), lit(1).as("is_freq"))
     docs
@@ -151,9 +145,9 @@ object TextFilters {
     * '' when the whole doc was repeated spans.
     */
   def removeRepeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minDf: Long, strategy: String = "auto"): DataFrame = {
+      n: Int, minDf: Long): DataFrame = {
     require(n >= 1, s"n must be >= 1: $n")
-    val bcast = useMinedBroadcast(docs, strategy)
+    val bcast = useMinedBroadcast(docs)
     val base = docs
       .filter(col(textCol).isNotNull && length(trim(col(textCol))) > 0)
       .select(col(idCol), TextFunctions.words(col(textCol)).as("w"))
@@ -217,7 +211,6 @@ object TextFilters {
     */
   def removeRepeatedSpansFixpoint(docs: DataFrame, idCol: String,
       textCol: String, n: Int, minDf: Long, maxPasses: Int = 8,
-      strategy: String = "auto",
       checkpointDir: Option[String] = None,
       checkpointInterval: Int = 1): (DataFrame, Seq[Long]) = {
     require(maxPasses >= 1, s"maxPasses must be >= 1: $maxPasses")
@@ -234,7 +227,7 @@ object TextFilters {
       ck.roundDone()
       c
     }
-    var cur = ck(removeRepeatedSpans(docs, idCol, textCol, n, minDf, strategy))
+    var cur = ck(removeRepeatedSpans(docs, idCol, textCol, n, minDf))
     var lastCum = cumRemoved(cur)
     val perPass = scala.collection.mutable.ArrayBuffer(lastCum)
     var pass = 1
@@ -242,7 +235,7 @@ object TextFilters {
       val next = removeRepeatedSpans(
         cur.filter(length(col("text_clean")) > 0)
           .select(col(idCol), col("text_clean").as(textCol)),
-        idCol, textCol, n, minDf, strategy)
+        idCol, textCol, n, minDf)
       // left join: emptied docs have no `next` row and keep their
       // accumulated state; re-cleaned docs fold this pass's removals
       // into the running totals

@@ -163,12 +163,11 @@ object DedupQueries {
         .select(col("doc_id"), col("text"))
         .union(docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
           .select((col("doc_id") + off).as("doc_id"), col("text")))
-      // strategy pinned to "bloom": this query demonstrates the
-      // no-shuffle shape a 100 TB corpus needs; "auto" would pick the
-      // plain broadcast anti-join at oracle scale. Crossover measured
-      // in SCALING.md (IncrAb).
-      Dedup.incrementalNew(corpus, batch, "doc_id", "text",
-          strategy = "bloom")
+      // the bloom form called directly: this query demonstrates the
+      // no-shuffle shape a 100 TB corpus needs; incrementalNew would
+      // pick the plain broadcast anti-join at oracle scale. Crossover
+      // measured in SCALING.md (IncrAb).
+      Dedup.incrementalNewBloom(corpus, batch, "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 

@@ -71,6 +71,9 @@ object StreamQueries {
     root.toString
   }
 
+  /** Drop-zone bytes per streaming state partition. */
+  private val streamPartitionBytes = 32L << 20
+
   /** Scale-adaptive shuffle/state partition count for the streaming
     * replays (r16, guide §2: derive partitioning from input size, not
     * a constant). Stateful streaming pins its state partitioning to
@@ -80,8 +83,7 @@ object StreamQueries {
     * kilobytes of state — measured 40-60% of these queries' wall at
     * sf0.1 (R16StreamProbe: stream_window_agg 5.74 s at 32 parts vs
     * 3.39 s at 8). Sized from the drop-zone bytes at one state
-    * partition per `targetBytes` (default 32 MB, conf
-    * `spark.graft.stream.targetPartitionBytes`), floored at 1 and
+    * partition per [[streamPartitionBytes]], floored at 1 and
     * capped by the session's own shuffle partitions — at 100 TB the
     * same formula yields thousands of partitions, so this is not a
     * local[32] constant. Partition count never changes WHAT a
@@ -90,15 +92,13 @@ object StreamQueries {
     */
   private def adaptiveParts(s: SparkSession, zoneDir: String): Int = {
     val sess = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = s.conf.getOption("spark.graft.stream.targetPartitionBytes")
-      .map(_.toLong).getOrElse(32L << 20)
     val bytes =
       try {
         import scala.jdk.CollectionConverters._
         Files.walk(java.nio.file.Paths.get(zoneDir)).iterator().asScala
           .filter(Files.isRegularFile(_)).map(Files.size).sum
       } catch { case _: java.io.IOException => 0L }
-    math.max(1, math.min(sess, math.ceil(bytes.toDouble / target).toInt))
+    math.max(1, math.min(sess, math.ceil(bytes.toDouble / streamPartitionBytes).toInt))
   }
 
   /** Run `body` with spark.sql.shuffle.partitions pinned to the

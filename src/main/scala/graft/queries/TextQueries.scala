@@ -187,7 +187,7 @@ object TextQueries {
     // log-odds model scores the WHOLE corpus, summarized per source
     // (the view a data team watches: which feed skews hi/lo). Train
     // is one explode + one groupBy(word); scoring is one explode +
-    // the strategy-gated model join + one groupBy(doc) — integer
+    // the size-gated model join + one groupBy(doc) — integer
     // micro-unit sums, so the distributed addition is
     // order-independent and the full composition hash-verifies.
     "quality_classifier" -> ((s, d) => {

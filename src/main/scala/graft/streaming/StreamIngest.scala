@@ -621,36 +621,16 @@ object StreamIngest {
     * downstream (r9 advice — they previously vanished from both
     * dirs). A pipeline that wants them rejected instead composes a
     * validation gate upstream ([[gatedRoutedSink]]'s job).
-    *
-    * `shards` (r10): 1 = the single broadcast sketch; above 1 the
-    * gate builds [[graft.operators.Dedup.corpusSketchSharded]]'s
-    * prefix-sharded sketches instead — the published corpus is
-    * exactly the side that outgrows a single broadcast first, and
-    * this sink's build-once/reuse-per-batch contract is unchanged
-    * (sketches built at sink construction, every micro-batch pays
-    * only its own shard-dispatched probe). Spec-pinned identical to
-    * the single-sketch gate.
     */
   def corpusGateSink(stream: DataFrame, idCol: String, textCol: String,
                      corpus: DataFrame, outDir: String, rejectDir: String,
                      checkpoint: String,
                      expectedItems: Long = 1L << 20, fpp: Double = 0.01,
-                     trigger: Trigger = Trigger.AvailableNow(),
-                     shards: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] = {
+                     trigger: Trigger = Trigger.AvailableNow())
+      : DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.Dedup
-    require(shards >= 1, s"shards must be >= 1: $shards")
-    val spark = corpus.sparkSession
-    val matcher: DataFrame => DataFrame =
-      if (shards == 1) {
-        val sketch = spark.sparkContext.broadcast(
-          Dedup.corpusSketch(corpus, textCol, expectedItems, fpp))
-        fps => Dedup.matchedFingerprints(corpus, textCol, fps, sketch)
-      } else {
-        val sketches = Dedup.corpusSketchSharded(corpus, textCol, shards,
-          expectedItems, fpp)
-        fps => Dedup.matchedFingerprintsSharded(corpus, textCol, fps,
-          sketches, shards)
-      }
+    val sketch = corpus.sparkSession.sparkContext.broadcast(
+      Dedup.corpusSketch(corpus, textCol, expectedItems, fpp))
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -664,7 +644,8 @@ object StreamIngest {
         // persisted: consumed by both the survivor anti-join and the
         // reject semi-join — without it each write would rescan the
         // corpus for its own copy of the matched set
-        val matched = matcher(withFp.select(col("fp"))).persist()
+        val matched = Dedup.matchedFingerprints(corpus, textCol,
+          withFp.select(col("fp")), sketch).persist()
         matched.count()
         withFp.join(broadcast(matched), Seq("fp"), "left_anti")
           .drop("fp")

@@ -115,7 +115,7 @@ class ConcurrencySpec extends SparkSpec {
         gate.await()
         try set(graft.operators.Dedup.components(chain(lo, 200), maxIter = 30,
             checkpointDir = Some(dir), checkpointInterval = 3,
-            strategy = "loop")
+            localEdgeThreshold = 0L)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
         catch { case t: Throwable => errs.add(t) }
       })

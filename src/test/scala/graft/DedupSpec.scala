@@ -33,18 +33,21 @@ class DedupSpec extends SparkSpec {
       (5L, "tri"), (6L, "tri"), (7L, "tri"),                // group of 3
       (8L, null.asInstanceOf[String])                       // excluded
     ).toDF("doc_id", "text")
-    val out = Dedup.softWeights(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val below = Dedup.softWeights(docs, "doc_id", "text")
+    val out = below.orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(out.toSeq == Seq(
       (1L, 2L, 500000L, true), (2L, 1L, 1000000L, true),
       (3L, 1L, 1000000L, true), (4L, 2L, 500000L, false),
       (5L, 3L, 333333L, true), (6L, 3L, 333333L, false),
       (7L, 3L, 333333L, false)), out.toSeq.toString)
-    // the broadcast-ceiling gate's two strategies are output-identical
-    val shuffled = Dedup.softWeights(docs, "doc_id", "text",
-        strategy = "shuffle")
-      .orderBy("doc_id").collect()
+    // the broadcast-ceiling gate's two sides are output-identical: a
+    // 1-byte threshold puts the same corpus above the ceiling
+    val above = Dedup.softWeights(localCopy(thresholdSession(1L), docs),
+      "doc_id", "text")
+    assert(hasBroadcastHint(below) && !hasBroadcastHint(above),
+      "the two runs must take different sides of the ceiling")
+    val shuffled = above.orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(shuffled.toSeq == out.toSeq)
   }
@@ -264,16 +267,21 @@ class DedupSpec extends SparkSpec {
     val chain = (1L until 128L).map(i => (i, i + 1))
     val star = (1002L to 1501L).map(i => (1001L, i))
     val pairs = (chain ++ star).toDF("id_a", "id_b")
-    // loop strategy forced: this test pins the star loop's truncation
-    // policies (auto would union-find this tiny graph on the driver);
-    // the base is the DRIVER path, so the same comparison also pins
-    // local-vs-loop strategy equality
-    def labels(dir: Option[String], k: Int) =
+    // localEdgeThreshold 0 sends the graph to the star loop: this test
+    // pins the loop's truncation policies (the default would
+    // union-find this tiny graph on the driver); the base is the
+    // DRIVER path, so the same comparison also pins local-vs-loop
+    // equality
+    def loop(dir: Option[String], k: Int) =
       Dedup.components(pairs, checkpointDir = dir, checkpointInterval = k,
-          strategy = "loop")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val base = Dedup.components(pairs, strategy = "local")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        localEdgeThreshold = 0L)
+    def labels(dir: Option[String], k: Int) =
+      loop(dir, k).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = Dedup.components(pairs)
+    assert(SparkSpec.componentsOnDriver(local) &&
+      !SparkSpec.componentsOnDriver(loop(None, 1)),
+      "the base and the loop runs must take different paths")
+    val base = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(base.size == 128 + 501)
     val dir = java.nio.file.Files.createTempDirectory("graft_ck_iv").toString
     for ((d, k) <- Seq(None -> 1, None -> 3, None -> 50,
@@ -288,11 +296,9 @@ class DedupSpec extends SparkSpec {
       finally s.close()
     }
     val every = java.nio.file.Files.createTempDirectory("graft_ck_iv1").toString
-    Dedup.components(pairs, checkpointDir = Some(every),
-      strategy = "loop").collect()
+    loop(Some(every), 1).collect()
     val sparse = java.nio.file.Files.createTempDirectory("graft_ck_iv50").toString
-    Dedup.components(pairs, checkpointDir = Some(sparse),
-      checkpointInterval = 50, strategy = "loop").collect()
+    loop(Some(sparse), 50).collect()
     assert(rddDirs(sparse) < rddDirs(every),
       s"interval 50 wrote ${rddDirs(sparse)} rdd dirs vs every-round's " +
         s"${rddDirs(every)} — expected strictly fewer")
@@ -305,11 +311,14 @@ class DedupSpec extends SparkSpec {
       val n = 300
       val pairs = Seq.fill(400)(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("id_a", "id_b")
-      val loop = Dedup.components(pairs, strategy = "loop")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val local = Dedup.components(pairs, strategy = "local")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == loop, s"trial $trial: strategies disagree")
+      val loopDf = Dedup.components(pairs, localEdgeThreshold = 0L)
+      val localDf = Dedup.components(pairs)
+      assert(SparkSpec.componentsOnDriver(localDf) &&
+        !SparkSpec.componentsOnDriver(loopDf),
+        s"trial $trial: the two runs must take different paths")
+      val loop = loopDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = localDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(local == loop, s"trial $trial: driver and loop disagree")
       assert(loop.nonEmpty)
     }
   }
@@ -334,15 +343,22 @@ class DedupSpec extends SparkSpec {
   test("resolve: survivors are component minima, singletons pass through") {
     val docs = Seq(1L, 2L, 3L, 4L, 9L).toDF("doc_id") // 9 is in no pair
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val got = Dedup.resolve(docs, pairs, "doc_id")
+    val below = Dedup.resolve(docs, pairs, "doc_id")
+    val got = below
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(got == Map(
       1L -> (1L, true), 2L -> (1L, false), 3L -> (1L, false),
       4L -> (4L, true), 9L -> (9L, true)), s"wrong resolution: $got")
-    // the r11 broadcast-ceiling gate's strategies are output-identical
-    val shuffled = Dedup.resolve(docs, pairs, "doc_id", strategy = "shuffle")
+    // the r11 broadcast-ceiling gate's two sides are output-identical:
+    // a 1-byte threshold puts the labels above the ceiling
+    val s1 = thresholdSession(1L)
+    val above = Dedup.resolve(localCopy(s1, docs), localCopy(s1, pairs),
+      "doc_id")
+    assert(hasBroadcastHint(below) && !hasBroadcastHint(above),
+      "the two runs must take different sides of the ceiling")
+    val shuffled = above
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(shuffled == got, s"strategy divergence: $shuffled vs $got")
+    assert(shuffled == got, s"ceiling-side divergence: $shuffled vs $got")
   }
 
   test("resolve: a group whose minimum is absent from docs still keeps a survivor") {
@@ -487,49 +503,29 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     // a high fpp forces many false-positive candidates through the
     // sketch; the verify join must reclaim every one of them
-    for (fpp <- Seq(0.5, 0.01); strategy <- Seq("bloom", "join", "auto")) {
-      val got = Dedup.incrementalNew(corpusDf, batch, "doc_id", "text",
-          expectedItems = 1024, fpp = fpp, strategy = strategy)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == plain,
-        s"fpp=$fpp strategy=$strategy: diverged from anti-join")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    for (fpp <- Seq(0.5, 0.01)) {
+      val bloom = Dedup.incrementalNewBloom(corpusDf, batch, "doc_id", "text",
+        expectedItems = 1024, fpp = fpp)
+      assert(ids(bloom) == plain, s"fpp=$fpp bloom: diverged from anti-join")
     }
-    intercept[IllegalArgumentException] {
-      Dedup.incrementalNew(corpusDf, batch, "doc_id", "text",
-        strategy = "nope")
-    }
-  }
-
-  test("sharded bloom sketch: identical rows to the single sketch and the anti-join") {
-    import graft.functions.{TextFunctions => T}
-    val docs = Tables.documents(spark, sf0001)
-    val corpusDf = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") % 2 === 1)
+    // incrementalNew picks the join form under the ceiling and the
+    // bloom form above it (a 1-byte threshold): the sketch probe is
+    // the one UDF in either plan
+    def usesSketch(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.toString.contains("UDF")
+    val s1 = thresholdSession(1L)
+    val d1 = Tables.documents(s1, sf0001)
+    val batch1 = d1.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
-      .union(docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+      .union(d1.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
         .select((col("doc_id") + 300000).as("doc_id"), col("text")))
-    val plain = Dedup.incrementalNew(corpusDf, batch, "doc_id", "text",
-        strategy = "join")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    // high fpp floods the prefilter with false positives; the verify
-    // join must reclaim them on every shard count, including shard
-    // counts far above the fingerprint-prefix cardinality in play
-    for (shards <- Seq(1, 3, 16); fpp <- Seq(0.5, 0.01)) {
-      val got = Dedup.incrementalNewSharded(corpusDf, batch, "doc_id", "text",
-          shards = shards, expectedItems = 1024, fpp = fpp)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == plain, s"shards=$shards fpp=$fpp: diverged")
-    }
-    // no false negatives across the shard boundary: every corpus
-    // fingerprint must be matched by the sharded probe (build and
-    // probe dispatch must agree on shardOfFp)
-    val sketches = Dedup.corpusSketchSharded(corpusDf, "text", shards = 8,
-      expectedItems = 1024, fpp = 0.01)
-    val corpusFps = corpusDf.filter(col("text").isNotNull)
-      .select(T.fingerprint(col("text")).as("fp")).distinct()
-    val matched = Dedup.matchedFingerprintsSharded(corpusDf, "text",
-      corpusFps, sketches, shards = 8)
-    assert(matched.count() == corpusFps.count(),
-      "sharded sketch dropped a corpus fingerprint (false negative)")
+    val joinSide = Dedup.incrementalNew(corpusDf, batch, "doc_id", "text")
+    val bloomSide = Dedup.incrementalNew(d1.filter(col("doc_id") % 2 === 0),
+      batch1, "doc_id", "text", expectedItems = 1024, fpp = 0.5)
+    assert(!usesSketch(joinSide) && usesSketch(bloomSide),
+      "the two runs must take different sides of the ceiling")
+    assert(ids(joinSide) == plain && ids(bloomSide) == plain)
   }
 }

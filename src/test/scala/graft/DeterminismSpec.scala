@@ -121,10 +121,13 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("connected components converge identically over a flaky edge frame") {
     val pairs = spark.range(511)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    assert(!SparkSpec.componentsOnDriver(
+        Dedup.components(pairs, localEdgeThreshold = 0L)) &&
+      SparkSpec.componentsOnDriver(Dedup.components(pairs)),
+      "the loop and local runs must take different paths")
     retryInvariant("components-loop", pairs)(
-      Dedup.components(_, strategy = "loop"))
-    retryInvariant("components-local", pairs)(
-      Dedup.components(_, strategy = "local"))
+      Dedup.components(_, localEdgeThreshold = 0L))
+    retryInvariant("components-local", pairs)(Dedup.components(_))
   }
 
   test("kill-and-reschedule mid-task leaves aggregation content intact") {

@@ -83,18 +83,16 @@ class GatedJoinSpec extends SparkSpec {
 
   test("negative control: the detector FIRES on the ungated shuffle form (non-vacuity)") {
     // the bug regime is a corpus big enough that STATIC stats don't
-    // auto-broadcast (at sf0.001 they would, masking the leak);
-    // disabling the threshold reproduces it: the ungated group join
-    // plans as a shuffled join whose ENSURE_REQUIREMENTS exchanges
-    // carry raw corpus-fingerprint rows — exactly what R11Probe3
-    // measured before AQE's late broadcast conversion left them
-    // behind. If the detector can't see THAT, the eight green
+    // auto-broadcast (at sf0.001 they would, masking the leak); a
+    // 1-byte threshold reproduces it (with -1 the fixed fallback cutoff
+    // would keep this tiny corpus on the broadcast side): the ungated
+    // group join plans as a shuffled join whose ENSURE_REQUIREMENTS
+    // exchanges carry raw corpus-fingerprint rows — exactly what
+    // R11Probe3 measured before AQE's late broadcast conversion left
+    // them behind. If the detector can't see THAT, the eight green
     // canaries above are vacuous (the r11 q15/q16/q22 lesson).
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val docs = Tables.documents(s2, sf0001)
-    val ungated = graft.operators.Dedup.softWeights(
-      docs, "doc_id", "text", strategy = "shuffle")
+    val docs = Tables.documents(thresholdSession(1L), sf0001)
+    val ungated = graft.operators.Dedup.softWeights(docs, "doc_id", "text")
     val leaks = corpusRowExchanges(ungated, "documents")
     assert(leaks.nonEmpty,
       "detector did not flag the ungated shuffle-join form — canary is vacuous")

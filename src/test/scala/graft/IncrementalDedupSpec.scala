@@ -159,42 +159,6 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(rej2 == Seq(1L, 4L, 7L), s"audit rows after batch 2: $rej2")
   }
 
-  test("sharded corpus gate is decision-identical to the single-sketch gate") {
-    import spark.implicits._
-    val drop = Files.createTempDirectory("sgate_drop").toString
-    val out = Files.createTempDirectory("sgate_out").toString
-    val rej = Files.createTempDirectory("sgate_rej").toString
-    val cp = Files.createTempDirectory("sgate_cp").toString
-    val corpus = Seq((100L, base1), (101L, base2)).toDF("doc_id", "text")
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType), StructField("text", StringType)))
-    val sink = StreamIngest.corpusGateSink(
-      StreamIngest.fileStream(spark, drop, schema)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text")),
-      "doc_id", "text", corpus, out, rej, cp, shards = 4)
-    Files.writeString(java.nio.file.Paths.get(s"$drop/b0.csv"),
-      s"""doc_id,text
-         |1,"  ${base1.toUpperCase} "
-         |2,"$nearDup1"
-         |3,"$base3"
-         |4,"$base2"
-         |5,
-         |""".stripMargin)
-    StreamIngest.runOnce(sink)
-    val out0 = spark.read.parquet(s"$out/batch=0")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(out0 == Seq(2L, 3L, 5L),
-      s"sharded gate: drop 1 and 4, pass near-dup/new/null rows: $out0")
-    val rejected = spark.read.parquet(rej)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(rejected == Seq(1L, 4L), s"sharded gate audit rows: $rejected")
-    intercept[IllegalArgumentException] {
-      StreamIngest.corpusGateSink(
-        StreamIngest.fileStream(spark, drop, schema),
-        "doc_id", "text", corpus, out, rej, cp, shards = 0)
-    }
-  }
-
   test("near gate drops exact copies and near-dups, passes new/null/empty rows") {
     import spark.implicits._
     val corpus = Seq((1L, base1), (2L, base2)).toDF("doc_id", "text")

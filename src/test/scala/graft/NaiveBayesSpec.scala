@@ -63,12 +63,20 @@ class NaiveBayesSpec extends SparkSpec {
       (10L, "excellent prose shared"),
       (11L, "spam shared")
     ).toDF("doc_id", "text")
-    def rows(strategy: String) =
-      NaiveBayes.score(docs, "doc_id", "text", model, seed, strategy)
-        .orderBy("doc_id").collect().toSeq
-    assert(rows("broadcast") == rows("shuffle"))
-    val bPlan = NaiveBayes.score(docs, "doc_id", "text", model, seed,
-      "broadcast").queryExecution.executedPlan.toString
+    // the gate reads the SEED frame's size: under the default ceiling
+    // it broadcasts, above a 1-byte threshold it shuffle-joins; the
+    // model is a local copy so the only hint left is the gate's own
+    val above = thresholdSession(1L)
+    def scored(s: org.apache.spark.sql.SparkSession) =
+      NaiveBayes.score(localCopy(s, docs), "doc_id", "text",
+        localCopy(s, model), localCopy(s, seed))
+    val b = scored(spark)
+    val sh = scored(above)
+    assert(hasBroadcastHint(b) && !hasBroadcastHint(sh),
+      "the two runs must take different sides of the ceiling")
+    assert(b.orderBy("doc_id").collect().toSeq ==
+      sh.orderBy("doc_id").collect().toSeq)
+    val bPlan = b.queryExecution.executedPlan.toString
     assert(bPlan.contains("BroadcastHashJoin"), bPlan)
   }
 

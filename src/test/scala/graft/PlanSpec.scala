@@ -198,8 +198,7 @@ class PlanSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
     val bloomPlan = planString(
-      Dedup.incrementalNew(corpus, batch, "doc_id", "text",
-        strategy = "bloom"))
+      Dedup.incrementalNewBloom(corpus, batch, "doc_id", "text"))
     assert(!bloomPlan.contains("SortMergeJoin") &&
       !bloomPlan.contains("ShuffledHashJoin"),
       s"corpus or batch rides a shuffled join:\n$bloomPlan")
@@ -211,14 +210,26 @@ class PlanSpec extends SparkSpec {
       "Exchange hashpartitioning".r.findAllIn(bloomPlan).length
     assert(shuffles <= 2,
       s"expected <=2 candidate-distinct shuffles, got $shuffles:\n$bloomPlan")
-    // the join strategy on a broadcastable corpus: Catalyst turns the
-    // plain anti-join into a broadcast anti-join — no shuffle at all
+    // incrementalNew on a broadcastable corpus takes the join form:
+    // Catalyst turns the plain anti-join into a broadcast anti-join —
+    // no shuffle at all, and no sketch probe
     val joinPlan = planString(
-      Dedup.incrementalNew(corpus, batch, "doc_id", "text",
-        strategy = "join"))
+      Dedup.incrementalNew(corpus, batch, "doc_id", "text"))
     assert(joinPlan.contains("BroadcastHashJoin") &&
       joinPlan.contains("LeftAnti") &&
       !joinPlan.contains("SortMergeJoin"), joinPlan)
+    assert(bloomPlan.contains("UDF") && !joinPlan.contains("UDF"),
+      s"only the bloom form probes the sketch:\n$joinPlan")
+    // above the ceiling (a 1-byte threshold) incrementalNew takes the
+    // bloom form itself
+    val s1 = thresholdSession(1L)
+    val d1 = Tables.documents(s1, sf0001)
+    val abovePlan = planString(Dedup.incrementalNew(
+      d1.filter(col("doc_id") % 2 === 0),
+      d1.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
+      "doc_id", "text"))
+    assert(abovePlan.contains("UDF") && abovePlan.contains("LeftAnti"),
+      abovePlan)
   }
 
   test("q19 disjunction shares ONE join — no per-branch union of fact scans (r11)") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** A clone of the shared session whose broadcast threshold is
+    * `bytes`: every size-driven broadcast ceiling in the operators
+    * scales from it, so 1 puts any real input above the ceiling. */
+  def thresholdSession(bytes: Long): SparkSession =
+    SparkSpec.thresholdSession(spark, bytes)
+
+  /** `df`'s rows as a local relation of session `s`. */
+  def localCopy(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(df.collectAsList(), df.schema)
+
+  /** Whether a join in `df`'s optimized plan carries an explicit
+    * broadcast hint — the side of a broadcast-ceiling decision the
+    * operator took, whatever Catalyst's own size planning adds. */
+  def hasBroadcastHint(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.toString.contains("strategy=broadcast")
 }
 
 object SparkSpec {
@@ -25,4 +41,17 @@ object SparkSpec {
     graft.plans.GraftExtensions.ensureRegistered(s)
     s
   }
+
+  def thresholdSession(s: SparkSession, bytes: Long): SparkSession = {
+    val c = s.newSession()
+    c.conf.set("spark.sql.autoBroadcastJoinThreshold", bytes.toString)
+    graft.plans.GraftExtensions.ensureRegistered(c)
+    c
+  }
+
+  /** Whether [[graft.operators.Dedup.components]] union-found the graph
+    * on the driver (its labels are a local relation) rather than
+    * running the star loop. */
+  def componentsOnDriver(labels: DataFrame): Boolean =
+    labels.queryExecution.executedPlan.toString.contains("LocalTableScan")
 }

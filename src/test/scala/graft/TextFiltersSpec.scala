@@ -215,7 +215,9 @@ class TextFiltersSpec extends SparkSpec {
 
   test("mined-set join strategies are output-identical (broadcast vs shuffle)") {
     // the r10 broadcast-ceiling contract: above the ceiling the mined
-    // set joins without the hint — results must be byte-identical
+    // set joins without the hint — results must be byte-identical.
+    // The tiny corpus is under the default ceiling; a threshold of 1
+    // byte puts it above.
     val chunk = "licensed under creative commons"
     val docs = Seq(
       (1L, s"alpha beta $chunk gamma delta"),
@@ -223,53 +225,53 @@ class TextFiltersSpec extends SparkSpec {
       (3L, s"iota kappa lambda $chunk"),
       (4L, "totally unique words here only once"),
       (5L, "hi there")).toDF("doc_id", "text")
-    def rows(strategy: String) =
-      TextFilters.removeRepeatedSpans(docs, "doc_id", "text",
-          n = 3, minDf = 3L, strategy = strategy)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(rows("broadcast") == rows("shuffle"))
-    def bp(strategy: String) =
-      TextFilters.boilerplateFraction(docs, "doc_id", "text",
-          n = 3, minDf = 3L, strategy = strategy)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(bp("broadcast") == bp("shuffle"))
-    // auto at test scale picks broadcast (tiny corpus under the
-    // ceiling) and matches both
-    assert(rows("auto") == rows("broadcast"))
-    intercept[IllegalArgumentException] {
-      TextFilters.removeRepeatedSpans(docs, "doc_id", "text",
-        n = 3, minDf = 3L, strategy = "bogus")
-    }
+    val above = localCopy(thresholdSession(1L), docs)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val spansB = TextFilters.removeRepeatedSpans(docs, "doc_id", "text",
+      n = 3, minDf = 3L)
+    val spansS = TextFilters.removeRepeatedSpans(above, "doc_id", "text",
+      n = 3, minDf = 3L)
+    assert(hasBroadcastHint(spansB) && !hasBroadcastHint(spansS),
+      "the two runs must take different sides of the ceiling")
+    assert(rows(spansB) == rows(spansS))
+    val bpB = TextFilters.boilerplateFraction(docs, "doc_id", "text",
+      n = 3, minDf = 3L)
+    val bpS = TextFilters.boilerplateFraction(above, "doc_id", "text",
+      n = 3, minDf = 3L)
+    assert(hasBroadcastHint(bpB) && !hasBroadcastHint(bpS),
+      "the two runs must take different sides of the ceiling")
+    assert(rows(bpB) == rows(bpS))
   }
 
   test("mined-set join plan shapes: hint present under the ceiling, absent above") {
     val docs = (1L to 6L).map(i => (i, s"common shared phrase tail$i"))
       .toDF("doc_id", "text")
     val bPlan = TextFilters.boilerplateFraction(docs, "doc_id", "text",
-      n = 3, minDf = 5L, strategy = "broadcast")
+      n = 3, minDf = 5L)
       .queryExecution.executedPlan.toString
     assert(bPlan.contains("BroadcastHashJoin"), bPlan)
-    // "shuffle" removes the HINT; at test scale Catalyst's size-based
-    // planning would still broadcast the tiny mined side, so disable
-    // the session threshold to expose the above-ceiling shape — the
-    // regime the strategy exists for, where nothing may broadcast
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sPlan = TextFilters.boilerplateFraction(docs, "doc_id", "text",
-        n = 3, minDf = 5L, strategy = "shuffle")
-        .queryExecution.executedPlan.toString
-      assert(sPlan.contains("SortMergeJoin") || sPlan.contains("ShuffledHashJoin"),
-        sPlan)
-      // and with the threshold disabled, "auto" must also refuse the
-      // broadcast hint (the ceiling falls back to a fixed cutoff, but
-      // the tiny corpus is under it — broadcast hint is still chosen;
-      // the hint alone cannot OOM a tiny set, which is the contract)
-      val aPlan = TextFilters.removeRepeatedSpans(docs, "doc_id", "text",
-        n = 3, minDf = 5L, strategy = "shuffle")
-        .queryExecution.executedPlan.toString
-      assert(!aPlan.contains("BroadcastHashJoin"), aPlan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // a 1-byte threshold puts the corpus above the ceiling and keeps
+    // Catalyst's own size-based planning from broadcasting the tiny
+    // mined side: the above-ceiling shape, where nothing may broadcast
+    val above = localCopy(thresholdSession(1L), docs)
+    val sPlan = TextFilters.boilerplateFraction(above, "doc_id", "text",
+      n = 3, minDf = 5L)
+      .queryExecution.executedPlan.toString
+    assert(sPlan.contains("SortMergeJoin") || sPlan.contains("ShuffledHashJoin"),
+      sPlan)
+    val aPlan = TextFilters.removeRepeatedSpans(above, "doc_id", "text",
+      n = 3, minDf = 5L)
+      .queryExecution.executedPlan.toString
+    assert(!aPlan.contains("BroadcastHashJoin"), aPlan)
+    // broadcasting disabled outright (-1) leaves the fixed cutoff, and
+    // the tiny corpus is under it: the hint is still chosen (a hint
+    // alone cannot OOM a tiny set, which is the contract)
+    val off = localCopy(thresholdSession(-1L), docs)
+    val oPlan = TextFilters.boilerplateFraction(off, "doc_id", "text",
+      n = 3, minDf = 5L)
+      .queryExecution.executedPlan.toString
+    assert(oPlan.contains("BroadcastHashJoin"), oPlan)
   }
 
   test("stripMarkup: tags split words, entities decode, amp decodes last") {
