@@ -50,11 +50,4 @@ object HashFunctions {
       b => struct(
         b.cast("int").as("band"),
         call_function("shiftright", sig, b.cast("int") * 16).bitwiseAND(lit(0xFFFFL)).as("bucket")))
-
-  /** Rolling (order-sensitive) document fingerprint: left fold
-    * chaining xxhash64(acc, token). Overflow-free — a polynomial
-    * accumulator would trip ANSI-mode ARITHMETIC_OVERFLOW.
-    */
-  def rollingFingerprint(tokens: Column): Column =
-    aggregate(tokens, lit(0L), (acc, w) => xxhash64(acc, w))
 }

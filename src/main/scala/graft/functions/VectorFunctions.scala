@@ -31,31 +31,4 @@ object VectorFunctions {
     val denom = sqrt(norm2(a) * norm2(b))
     when(denom === 0.0, lit(Double.NaN)).otherwise(dot(a, b) / denom)
   }
-
-  /** Deterministic ±1 pseudo-random weight for (plane, dim), derived
-    * from xxhash64 — the moral equivalent of a seeded RNG but
-    * reproducible inside a pure expression. The stride just has to
-    * exceed any realistic dimensionality so (plane, dim) pairs don't
-    * collide.
-    */
-  private def planeWeight(plane: Column, k: Column): Column =
-    ((xxhash64(plane * lit(1 << 20) + k) % 2 + 2) % 2 * 2 - 1).cast("double")
-
-  /** Random-hyperplane (SRP) LSH bucket id: `planes` sign bits packed
-    * into a long. Two vectors with small angle collide with high
-    * probability; used to bucket ANN candidates so the 100 TB path
-    * shuffles once on the bucket id instead of comparing all pairs.
-    * The projection runs over the vector's own length, so mixed or
-    * unexpected dimensionalities can't silently poison the buckets.
-    */
-  def srpBucket(vec: Column, planes: Int): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(planes - 1)), p => {
-        val proj = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, k) => x.cast("double") * planeWeight(p, k)),
-          lit(0.0), (acc, x) => acc + x)
-        when(proj > 0, call_function("shiftleft", lit(1L), p.cast("int"))).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.plans.GraftExtensions
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Scale-path ANN structures beyond the single-query search in
   * [[Similarity]]: IVF partitioning and k-NN self-join (SURVEY §2).
@@ -20,26 +21,39 @@ object Ann {
     * only nprobe/nlist of the data.
     */
   def trainCentroids(embs: DataFrame, vecCol: String, nlist: Int,
-                     iters: Int = 10, sampleLimit: Int = 100000): Array[Array[Double]] = {
+                     iters: Int = 10, sampleLimit: Int = 100000): Array[Array[Double]] =
+    sphericalKmeans(trainingSample(embs, vecCol, sampleLimit), nlist, iters)
+
+  /** The L2-normalized training sample every quantizer here trains on
+    * (IVF centroids, PQ codebooks, both for IVF+PQ).
+    *
+    * Deterministic hash-mod sample: a bare limit() takes a partition
+    * prefix, which biases centroids badly when the data is laid out
+    * by source/date (the normal layout) — but the previous fix
+    * (orderBy(xxhash64).limit) was a GLOBAL SORT of the full corpus
+    * just to draw a sample. keep-if-hash%mod==0 selects the same rows
+    * regardless of partitioning at pure scan cost, no shuffle. The
+    * count() is metadata-only on parquet. Collected rows are sorted
+    * locally (100k items) so downstream init is layout-independent.
+    */
+  private[operators] def trainingSample(embs: DataFrame, vecCol: String,
+                                        sampleLimit: Int): Array[Array[Double]] = {
     val spark = embs.sparkSession
     import spark.implicits._
-    // Deterministic hash-mod sample: a bare limit() takes a partition
-    // prefix, which biases centroids badly when the data is laid out
-    // by source/date (the normal layout) — but the previous fix
-    // (orderBy(xxhash64).limit) was a GLOBAL SORT of the full corpus
-    // just to draw a sample. keep-if-hash%mod==0 selects the same rows
-    // regardless of partitioning at pure scan cost, no shuffle. The
-    // count() is metadata-only on parquet. Collected rows are sorted
-    // locally (100k items) so downstream init is layout-independent.
     val total = embs.count()
     // ceil, not floor: total just under 2*sampleLimit would give
     // mod=1 and collect ~2x the intended driver-side bound
     val mod = math.max(1L, (total + sampleLimit - 1) / sampleLimit)
-    val sample = embs.select(col(vecCol))
+    embs.select(col(vecCol))
       .filter(pmod(xxhash64(col(vecCol)), lit(mod)) === 0)
       .as[Array[Float]].collect()
       .sortBy(v => (java.util.Arrays.hashCode(v), v.mkString(",")))
       .map(v => normalize(v.map(_.toDouble)))
+  }
+
+  /** Spherical k-means over a normalized [[trainingSample]]. */
+  private[operators] def sphericalKmeans(sample: Array[Array[Double]], nlist: Int,
+                                         iters: Int): Array[Array[Double]] = {
     require(sample.length >= nlist, s"need >= $nlist vectors to train")
     // deterministic init: evenly spaced sample points
     var centroids = Array.tabulate(nlist)(i => sample(i * (sample.length / nlist)))
@@ -62,26 +76,39 @@ object Ann {
     centroids
   }
 
-  private def normalize(v: Array[Double]): Array[Double] = {
+  private[operators] def normalize(v: Array[Double]): Array[Double] = {
     var n = 0.0; var i = 0
     while (i < v.length) { n += v(i) * v(i); i += 1 }
     val d = math.sqrt(n)
     if (d == 0) v else v.map(_ / d)
   }
 
+  private def dot(v: Array[Double], cent: Array[Double]): Double = {
+    var d = 0.0; var i = 0
+    while (i < v.length) { d += v(i) * cent(i); i += 1 }
+    d
+  }
+
+  /** The centroid nearest to the normalized `v` by dot product. */
   private[operators] def nearestCentroid(v: Array[Double],
                                          cents: Array[Array[Double]]): Int = {
     var best = 0; var bestDot = Double.NegativeInfinity
     var c = 0
     while (c < cents.length) {
-      val cent = cents(c)
-      var dot = 0.0; var i = 0
-      while (i < v.length) { dot += v(i) * cent(i); i += 1 }
-      if (dot > bestDot) { bestDot = dot; best = c }
+      val d = dot(v, cents(c))
+      if (d > bestDot) { bestDot = d; best = c }
       c += 1
     }
     best
   }
+
+  /** The `nprobe` list ids whose centroids are nearest to the
+    * normalized query `qn`.
+    */
+  private[operators] def nearestLists(qn: Array[Double], centroids: Array[Array[Double]],
+                                      nprobe: Int): Seq[Int] =
+    centroids.indices.map(c => c -> dot(qn, centroids(c)))
+      .sortBy(-_._2).take(nprobe).map(_._1)
 
   /** Assign every vector to its IVF list. One scan, no shuffle. */
   def assignLists(embs: DataFrame, idCol: String, vecCol: String,
@@ -103,28 +130,12 @@ object Ann {
   def ivfSearch(assigned: DataFrame, query: DataFrame, idCol: String,
                 vecCol: String, centroids: Array[Array[Double]],
                 k: Int, nprobe: Int): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    // collect ONCE and reuse the same vector for list selection and
-    // the broadcast side (head()+crossJoin evaluated the query frame
-    // twice — a non-deterministic source could pick one vector's lists
-    // and score another; a multi-row query silently used the first)
-    val qvs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qvs.length == 1,
-      s"ivfSearch expects exactly one query row, got ${qvs.length}" +
-        " (use ivfSearchEach for a batch of queries)")
-    val qv = qvs.head
-    val lists = nearestLists(qv, centroids, nprobe)
-    GraftExtensions.ensureRegistered(spark)
-    val pruned = assigned.filter(col("list_id").isin(lists: _*))
-      .crossJoin(broadcast(Seq(qv).toDF("q_vec")))
-    pruned
-      .select(col(idCol),
-        round(expr(s"graft_cosine(`$vecCol`, q_vec)"), 6).as("cos"),
-        col("list_id"))
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    // one collect feeds both list selection and scoring
+    val qv = Similarity.collectOneQuery(query, vecCol, "ivfSearch", Some("ivfSearchEach"))
+    val lists = nearestLists(normalize(qv.map(_.toDouble)), centroids, nprobe)
+    Similarity.exactTopK(assigned.filter(col("list_id").isin(lists: _*)),
+      Similarity.queryFrame(assigned.sparkSession, qv), idCol, vecCol, k,
+      keep = Seq("list_id"))
   }
 
   /** Batch IVF probe: one collect reads the query batch (driver-sized
@@ -144,8 +155,9 @@ object Ann {
       query.select(col(qIdCol).as("q_id"), col(vecCol).as("q_vec")),
       org.apache.spark.sql.types.StructField("list_id",
         org.apache.spark.sql.types.IntegerType, nullable = false),
-      r => nearestLists(
-        r.getAs[scala.collection.Seq[Float]]("q_vec").toArray, centroids, nprobe))
+      r => nearestLists(normalize(
+        r.getAs[scala.collection.Seq[Float]]("q_vec").toArray.map(_.toDouble)),
+        centroids, nprobe))
     val joined = assigned.filter(col("list_id").isin(allLists: _*))
       .join(broadcast(probeDf), Seq("list_id"))
     BatchProbe.topKPerQuery(joined, idCol, vecCol, k)
@@ -174,36 +186,57 @@ object Ann {
   }
 
   private def writeIvfMeta(spark: SparkSession, path: String,
-                           cents: Array[Array[Double]]): Unit = {
-    val json = new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsString(cents)
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_graft_ivf_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(s"""{"centroids":$json}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+                           cents: Array[Array[Double]]): Unit =
+    writeIndexMeta(spark, path, "_graft_ivf_meta.json",
+      s"""{"centroids":${new ObjectMapper().writeValueAsString(cents)}}""")
 
   /** Read the centroid matrix a [[buildIvfIndex]] index was built
     * with.
     */
   private[graft] def indexCentroids(spark: SparkSession,
-      indexPath: String): Array[Array[Double]] = {
-    val metaPath = new org.apache.hadoop.fs.Path(indexPath, "_graft_ivf_meta.json")
+      indexPath: String): Array[Array[Double]] =
+    matrix(readIndexMeta(spark, indexPath, "_graft_ivf_meta.json",
+      "buildIvfIndex", "IVF")(nonEmptyArray(_, "centroids")).get("centroids"))
+
+  /** Write a stored index's metadata sidecar: `json` as `file` under
+    * `path`. Every index keeps its quantizer or layout parameters here
+    * so a probe needs only the path — probing with parameters the
+    * index was not built with would return wrong neighbors silently.
+    */
+  private[operators] def writeIndexMeta(spark: SparkSession, path: String,
+                                        file: String, json: String): Unit = {
+    val metaPath = new Path(path, file)
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"$indexPath has no _graft_ivf_meta.json — not a buildIvfIndex index")
+    val out = fs.create(metaPath, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Parse the sidecar [[writeIndexMeta]] left as `file` under `path`.
+    * A missing sidecar means `path` is not a `builtBy` index; one that
+    * does not parse or fails `valid` is malformed `kind` metadata.
+    */
+  private[operators] def readIndexMeta(spark: SparkSession, path: String,
+      file: String, builtBy: String, kind: String)(
+      valid: JsonNode => Boolean): JsonNode = {
+    val metaPath = new Path(path, file)
+    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(metaPath), s"$path has no $file — not a $builtBy index")
     val in = fs.open(metaPath)
     val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val cents = tree.get("centroids")
-    require(cents != null && cents.isArray && cents.size() > 0,
-      s"malformed IVF index metadata: $json")
-    Array.tabulate(cents.size()) { c =>
-      val row = cents.get(c)
+    val tree = scala.util.Try(new ObjectMapper().readTree(json)).toOption.orNull
+    require(tree != null && valid(tree), s"malformed $kind index metadata: $json")
+    tree
+  }
+
+  private[operators] def nonEmptyArray(tree: JsonNode, field: String): Boolean =
+    tree.path(field).isArray && tree.path(field).size() > 0
+
+  /** A JSON array of number arrays as a matrix. */
+  private[operators] def matrix(n: JsonNode): Array[Array[Double]] =
+    Array.tabulate(n.size()) { c =>
+      val row = n.get(c)
       Array.tabulate(row.size())(i => row.get(i).asDouble())
     }
-  }
 
   /** Append new vectors to a stored [[buildIvfIndex]] index WITHOUT
     * retraining: the index's centroids are loaded and FROZEN, the
@@ -352,19 +385,6 @@ object Ann {
       .drop("list_id")
   }
 
-  /** The `nprobe` list ids whose centroids are nearest to `qv`. */
-  private def nearestLists(qv: Array[Float], centroids: Array[Array[Double]],
-                           nprobe: Int): Seq[Int] = {
-    val qn = normalize(qv.map(_.toDouble))
-    centroids.indices
-      .map(c => c -> {
-        var dot = 0.0; var i = 0
-        while (i < qn.length) { dot += qn(i) * centroids(c)(i); i += 1 }
-        dot
-      })
-      .sortBy(-_._2).take(nprobe).map(_._1)
-  }
-
   /** k-NN self-join via SRP-LSH buckets: candidates share a bucket
     * (single shuffle on the bucket id), exact cosine ranks within the
     * candidate set, top-k per probe row. Approximate: recall depends
@@ -465,14 +485,8 @@ object Ann {
         val g = groups.getOrElseUpdate((bucket, salt), new Group)
         g.ids += id; g.vecs += vec; g.probe += isProbe
       }
-      def sqNorm(v: Array[Float]): Double = {
-        var s = 0.0; var i = 0
-        while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
-        s
-      }
-      def round6(d: Double): Double =
-        if (d.isNaN || d.isInfinity) d
-        else BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      // Dedup's pair arithmetic: bitwise graft_cosine + Spark's round
+      import Dedup.{pairCos, round6, sqNorm}
       val out = mutable.ArrayBuffer.empty[(Long, Long, Double, Int)]
       groups.valuesIterator.foreach { g =>
         val m = g.vecs.length
@@ -490,22 +504,7 @@ object Ann {
             while (j < m) {
               val idb = g.ids(j)
               if (idb != ida) {
-                val xb = g.vecs(j)
-                val nLen = math.min(xa.length, xb.length)
-                var dot = 0.0; var t = 0
-                while (t < nLen) { dot += xa(t).toDouble * xb(t).toDouble; t += 1 }
-                // ragged pairs re-accumulate truncated norms like
-                // graft_cosine; fixed-dim corpora take the fast path
-                val c0 =
-                  if (xa.length == xb.length) dot / math.sqrt(na * norms(j))
-                  else {
-                    var na2 = 0.0; var nb2 = 0.0; var u = 0
-                    while (u < nLen) {
-                      val x = xa(u).toDouble; val y = xb(u).toDouble
-                      na2 += x * x; nb2 += y * y; u += 1
-                    }
-                    dot / math.sqrt(na2 * nb2)
-                  }
+                val c0 = pairCos(xa, na, g.vecs(j), norms(j))
                 if (!c0.isNaN) {
                   val c = round6(c0)
                   val beatsWorst = filled < k || c > hc(filled - 1) ||

@@ -1083,7 +1083,6 @@ object Dedup {
   def embeddingPairs(embs: DataFrame, idCol: String, vecCol: String,
                      minCosine: Double, blocks: Int = 0): DataFrame = {
     val spark = embs.sparkSession
-    import spark.implicits._
     GraftExtensions.ensureRegistered(spark)
     val base = embs.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
@@ -1100,31 +1099,50 @@ object Dedup {
         val byCores = math.ceil(math.sqrt(16.0 * spark.sparkContext.defaultParallelism))
         math.max(byCores, math.ceil(n / 65536.0)).toInt
       }
-    // Combo membership is computed row-local with builtin array
-    // functions (codegen'd, no join): a row in block g is side A of
-    // combos (g, g..B-1) and side B of combos (0..g-1, g). The
-    // explicit repartition pins one partition per combo: the shuffle
-    // INPUT is tiny (one id + vector per copy) so AQE's size-based
-    // coalescing would fuse the combos into one or two tasks — but
-    // the kernel's work is (n/B)² per combo, invisible to AQE's
-    // shuffle-byte stats. A user-specified partition count is exempt
-    // from coalescing.
-    val comboCount = b * (b + 1) / 2
-    val copies = base
-      .withColumn("g", pmod(xxhash64(col("id")), lit(b)).cast("int"))
-      .select(explode(expr(
-        s"""concat(
-           |  transform(sequence(g, ${b - 1}),
-           |    j -> named_struct('ba', g, 'bb', j, 'is_a', true)),
-           |  filter(transform(sequence(0, g),
-           |    i -> named_struct('ba', i, 'bb', g, 'is_a', false)),
-           |    s -> s.ba < g)
-           |)""".stripMargin)).as("c"), col("id"), col("vec"))
-      .select(col("c.ba"), col("c.bb"), col("c.is_a"), col("id"), col("vec"))
-      .repartition(comboCount, col("ba"), col("bb"))
-      .as[(Int, Int, Boolean, Long, Array[Float])]
+    // The explicit repartition pins one partition per combo: the
+    // shuffle INPUT is tiny (one id + vector per copy) so AQE's
+    // size-based coalescing would fuse the combos into one or two
+    // tasks — but the kernel's work is (n/B)² per combo, invisible to
+    // AQE's shuffle-byte stats. A user-specified partition count is
+    // exempt from coalescing.
+    val copies = comboCopies(base.select(lit(0).as("grp"), col("id"), col("vec"),
+        pmod(xxhash64(col("id")), lit(b)).cast("int").as("g"), lit(b).as("nsub")))
+      .repartition(b * (b + 1) / 2, col("ba"), col("bb"))
+    comboPairs(copies, minCosine).drop("grp")
+  }
+
+  /** Row-local combo membership for [[comboPairs]], from builtin array
+    * functions (codegen'd, no join): a row in block `g` of its group's
+    * `nsub` blocks is side A of combos (g, g..nsub-1) and side B of
+    * combos (0..g-1, g), so every unordered same-group pair meets in
+    * exactly one combo. Input (grp, id, vec, g, nsub); output
+    * (grp, ba, bb, is_a, id, vec).
+    */
+  private[operators] def comboCopies(rows: DataFrame): DataFrame =
+    rows.select(col("grp"), explode(expr(
+        """concat(
+          |  transform(sequence(g, nsub - 1),
+          |    j -> named_struct('ba', g, 'bb', j, 'is_a', true)),
+          |  filter(transform(sequence(0, g),
+          |    i -> named_struct('ba', i, 'bb', g, 'is_a', false)),
+          |    s -> s.ba < g)
+          |)""".stripMargin)).as("c"), col("id"), col("vec"))
+      .select(col("grp"), col("c.ba"), col("c.bb"), col("c.is_a"),
+        col("id"), col("vec"))
+
+  /** The exact pair kernel behind [[embeddingPairs]] and
+    * [[SemDedup.intraClusterPairs]]: each partition of `copies`
+    * ([[comboCopies]] rows, already shuffled so a combo's copies share
+    * a partition) groups its rows by (grp, ba, bb) and scores every
+    * pair of the combo with a primitive-float loop, emitting only
+    * pairs whose ROUNDED cosine is at least `minCosine`. Output
+    * (id_a, id_b, cos, grp) with id_a < id_b.
+    */
+  private[operators] def comboPairs(copies: DataFrame, minCosine: Double): DataFrame = {
+    val spark = copies.sparkSession
+    import spark.implicits._
     val guard = minCosine - 1e-6 // round(·,6) moves a value < 5e-7
-    copies.mapPartitions { rows =>
+    copies.as[(Int, Int, Int, Boolean, Long, Array[Float])].mapPartitions { rows =>
       import scala.collection.mutable
       final class Side {
         val ids = mutable.ArrayBuffer.empty[Long]
@@ -1132,70 +1150,32 @@ object Dedup {
       }
       // a partition usually holds one combo, but hash collisions can
       // put several (and leave others empty) — group locally
-      val combos = mutable.LinkedHashMap.empty[Long, (Side, Side)]
-      rows.foreach { case (ba, bb, isA, id, vec) =>
-        val key = (ba.toLong << 32) | (bb.toLong & 0xffffffffL)
-        val c = combos.getOrElseUpdate(key, (new Side, new Side))
+      val combos = mutable.LinkedHashMap.empty[(Int, Int, Int), (Side, Side)]
+      rows.foreach { case (grp, ba, bb, isA, id, vec) =>
+        val c = combos.getOrElseUpdate((grp, ba, bb), (new Side, new Side))
         val s = if (isA) c._1 else c._2
         s.ids += id
         s.vecs += vec
       }
-      // same arithmetic as graft_cosine (widen to double, sequential
-      // accumulation, dot / sqrt(na * nb)); splitting the interleaved
-      // loop into per-vector norm + per-pair dot keeps each
-      // accumulator's addition ORDER unchanged, so results are
-      // bitwise identical — required for the DuckDB hash oracle
-      def sqNorm(v: Array[Float]): Double = {
-        var na = 0.0; var i = 0
-        while (i < v.length) { val x = v(i).toDouble; na += x * x; i += 1 }
-        na
-      }
-      def dotp(x: Array[Float], y: Array[Float], n: Int): Double = {
-        var d = 0.0; var i = 0
-        while (i < n) { d += x(i).toDouble * y(i).toDouble; i += 1 }
-        d
-      }
-      // graft_cosine truncates to the shorter array, making the
-      // precomputed full-length norm wrong for ragged pairs — fall
-      // back to the interleaved per-pair loop there (never taken for
-      // fixed-dim corpora)
-      def raggedCos(x: Array[Float], y: Array[Float]): Double = {
-        val n = math.min(x.length, y.length)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xi = x(i).toDouble; val yi = y(i).toDouble
-          dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-        }
-        dot / math.sqrt(na * nb)
-      }
-      // Spark's round(double, 6): NaN/Inf pass through, else
-      // HALF_UP — replicated so the emitted value is the one the
-      // join formulation produced. Only matches pay the BigDecimal.
-      def round6(d: Double): Double =
-        if (d.isNaN || d.isInfinity) d
-        else BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      def score(idA: Long, xa: Array[Float], na: Double,
-                idB: Long, xb: Array[Float], nb: Double): Unit = {
-        // duplicate-id rows meet in their diagonal combo at distinct
-        // buffer indices — the join formulation's id_a < id_b filter
-        // excluded such self-pairs, so the kernel must too
-        if (idA != idB) {
-          val c =
-            if (xa.length == xb.length) dotp(xa, xb, xa.length) / math.sqrt(na * nb)
-            else raggedCos(xa, xb)
-          if (!c.isNaN && c >= guard) {
-            val r = round6(c)
-            if (!r.isNaN && r >= minCosine)
-              out += ((math.min(idA, idB), math.max(idA, idB), r))
+      val out = mutable.ArrayBuffer.empty[(Long, Long, Double, Int)]
+      combos.foreach { case ((grp, ba, bb), (sa, sb)) =>
+        def score(idA: Long, xa: Array[Float], na: Double,
+                  idB: Long, xb: Array[Float], nb: Double): Unit = {
+          // duplicate-id rows meet in their diagonal combo at distinct
+          // buffer indices — the join formulation's id_a < id_b filter
+          // excluded such self-pairs, so the kernel must too
+          if (idA != idB) {
+            val c = pairCos(xa, na, xb, nb)
+            if (!c.isNaN && c >= guard) {
+              val r = round6(c)
+              if (!r.isNaN && r >= minCosine)
+                out += ((math.min(idA, idB), math.max(idA, idB), r, grp))
+            }
           }
         }
-      }
-      combos.foreach { case (key, (sa, sb)) =>
-        val diag = (key >> 32).toInt == key.toInt
         val aIds = sa.ids; val aVecs = sa.vecs
         val aNorms = Array.tabulate(aVecs.length)(i => sqNorm(aVecs(i)))
-        if (diag) {
+        if (ba == bb) {
           // both endpoints arrive as side A; i < j covers each
           // unordered pair once
           var i = 0
@@ -1222,6 +1202,49 @@ object Dedup {
         }
       }
       out.iterator
-    }.toDF("id_a", "id_b", "cos")
+    }.toDF("id_a", "id_b", "cos", "grp")
   }
+
+  // The pair kernels' arithmetic is graft_cosine's (widen to double,
+  // sequential accumulation, dot / sqrt(na * nb)); splitting the
+  // interleaved loop into per-vector norm + per-pair dot keeps each
+  // accumulator's addition ORDER unchanged, so results are bitwise
+  // identical — required for the DuckDB hash oracle.
+
+  /** Squared L2 norm, accumulated in graft_cosine's order. */
+  private[operators] def sqNorm(v: Array[Float]): Double = {
+    var na = 0.0; var i = 0
+    while (i < v.length) { val x = v(i).toDouble; na += x * x; i += 1 }
+    na
+  }
+
+  /** graft_cosine of a pair whose squared norms `na`, `nb` are
+    * precomputed. graft_cosine truncates to the shorter array, making
+    * a full-length norm wrong for ragged pairs — those fall back to the
+    * interleaved per-pair loop (never taken for fixed-dim corpora).
+    */
+  private[operators] def pairCos(xa: Array[Float], na: Double,
+                                 xb: Array[Float], nb: Double): Double = {
+    val n = math.min(xa.length, xb.length)
+    var dot = 0.0; var i = 0
+    if (xa.length == xb.length) {
+      while (i < n) { dot += xa(i).toDouble * xb(i).toDouble; i += 1 }
+      dot / math.sqrt(na * nb)
+    } else {
+      var na2 = 0.0; var nb2 = 0.0
+      while (i < n) {
+        val x = xa(i).toDouble; val y = xb(i).toDouble
+        dot += x * y; na2 += x * x; nb2 += y * y; i += 1
+      }
+      dot / math.sqrt(na2 * nb2)
+    }
+  }
+
+  /** Spark's round(double, 6): NaN/Inf pass through, else HALF_UP —
+    * replicated so a kernel emits the value the SQL formulation would.
+    * Only matches pay the BigDecimal.
+    */
+  private[operators] def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinity) d
+    else BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

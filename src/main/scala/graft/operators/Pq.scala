@@ -37,21 +37,16 @@ object Pq {
     def dsub: Int = books.head.head.length
   }
 
-  /** Train per-subspace k-means codebooks over a deterministic
-    * hash-mod sample (same bounded-collect class and rationale as
-    * [[Ann.trainCentroids]]). `dim` must split evenly into `m`.
+  /** Train per-subspace k-means codebooks over [[Ann.trainingSample]]
+    * (the sample IVF centroids train on). `dim` must split evenly into
+    * `m`.
     */
   def train(embs: DataFrame, vecCol: String, m: Int, ksub: Int,
-            iters: Int = 10, sampleLimit: Int = 100000): Codebooks = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val total = embs.count()
-    val mod = math.max(1L, (total + sampleLimit - 1) / sampleLimit)
-    val sample = embs.select(col(vecCol))
-      .filter(pmod(xxhash64(col(vecCol)), lit(mod)) === 0)
-      .as[Array[Float]].collect()
-      .sortBy(v => (java.util.Arrays.hashCode(v), v.mkString(",")))
-      .map(v => l2normalize(v.map(_.toDouble)))
+            iters: Int = 10, sampleLimit: Int = 100000): Codebooks =
+    trainBooks(Ann.trainingSample(embs, vecCol, sampleLimit), m, ksub, iters)
+
+  private def trainBooks(sample: Array[Array[Double]], m: Int, ksub: Int,
+                         iters: Int): Codebooks = {
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim must divide evenly into m=$m subspaces")
@@ -103,11 +98,20 @@ object Pq {
     best
   }
 
-  private def l2normalize(v: Array[Double]): Array[Double] = {
-    var n = 0.0; var i = 0
-    while (i < v.length) { n += v(i) * v(i); i += 1 }
-    val d = math.sqrt(n)
-    if (d == 0) v else v.map(_ / d)
+  /** A vector's m sub-centroid indices: normalize, then the nearest
+    * codebook entry per subspace.
+    */
+  private def encodeRow(v: Array[Float], books: Array[Array[Array[Double]]],
+                        dsub: Int): (Array[Double], Array[Short]) = {
+    val n = Ann.normalize(v.map(_.toDouble))
+    val code = new Array[Short](books.length)
+    var s = 0
+    while (s < books.length) {
+      val sub = java.util.Arrays.copyOfRange(n, s * dsub, (s + 1) * dsub)
+      code(s) = nearestSub(sub, books(s)).toShort
+      s += 1
+    }
+    (n, code)
   }
 
   /** Encode every vector to its m sub-centroid indices. One
@@ -123,18 +127,7 @@ object Pq {
     val dsub = cb.dsub
     embs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val books = bc.value.books
-        val n = l2normalize(v.map(_.toDouble))
-        val code = new Array[Short](books.length)
-        var s = 0
-        while (s < books.length) {
-          val sub = java.util.Arrays.copyOfRange(n, s * dsub, (s + 1) * dsub)
-          code(s) = nearestSub(sub, books(s)).toShort
-          s += 1
-        }
-        (id, code)
-      }
+      .map { case (id, v) => (id, encodeRow(v, bc.value.books, dsub)._2) }
       .toDF(idCol, "pq_code")
   }
 
@@ -169,15 +162,9 @@ object Pq {
         element_at(codeCol, s + 1).cast("int") + 1))
   }
 
-  private def collectOneQuery(query: DataFrame, vecCol: String,
-                              what: String): Array[Double] = {
-    val spark = query.sparkSession
-    import spark.implicits._
-    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qs.length == 1,
-      s"$what expects exactly one query row, got ${qs.length}")
-    l2normalize(qs.head.map(_.toDouble))
-  }
+  private def normalizedQuery(query: DataFrame, vecCol: String,
+                              what: String): Array[Double] =
+    Ann.normalize(Similarity.collectOneQuery(query, vecCol, what).map(_.toDouble))
 
   /** ADC top-k: the query builds an m × ksub distance table on the
     * driver (tiny), every encoded row sums m table lookups — no
@@ -186,14 +173,16 @@ object Pq {
     * most similar first on normalized vectors).
     */
   def search(encoded: DataFrame, query: DataFrame, idCol: String,
-             vecCol: String, cb: Codebooks, k: Int): DataFrame = {
-    val q = collectOneQuery(query, vecCol, "Pq.search")
+             vecCol: String, cb: Codebooks, k: Int): DataFrame =
+    adcTopK(encoded, normalizedQuery(query, vecCol, "Pq.search"), idCol, cb, k)
+
+  private def adcTopK(encoded: DataFrame, q: Array[Double], idCol: String,
+                      cb: Codebooks, k: Int): DataFrame =
     encoded
       .select(col(idCol).cast("long").as(idCol),
         round(adcExpr(distanceTable(q, cb), col("pq_code")), 6).as("adc"))
       .orderBy(col("adc"), col(idCol))
       .limit(k)
-  }
 
   /** Build a stored IVF+PQ index — the composed 100 TB ANN shape
     * (FAISS's IVFPQ): vectors encode to m-short codes AND assign to
@@ -214,9 +203,11 @@ object Pq {
                    iters: Int = 10, sampleLimit: Int = 100000): Unit = {
     val spark = embs.sparkSession
     import spark.implicits._
-    val cb = train(embs, vecCol, m, ksub, iters, sampleLimit)
+    // one sample (one sizing count, one collect) trains both quantizers
+    val sample = Ann.trainingSample(embs, vecCol, sampleLimit)
+    val cb = trainBooks(sample, m, ksub, iters)
     val cents: Option[Array[Array[Double]]] =
-      if (nlist > 0) Some(Ann.trainCentroids(embs, vecCol, nlist, iters, sampleLimit))
+      if (nlist > 0) Some(Ann.sphericalKmeans(sample, nlist, iters))
       else None
     val bcCb = spark.sparkContext.broadcast(cb)
     val bcCents = spark.sparkContext.broadcast(cents)
@@ -224,17 +215,8 @@ object Pq {
     val coded = embs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .map { case (id, v) =>
-        val books = bcCb.value.books
-        val n = l2normalize(v.map(_.toDouble))
-        val code = new Array[Short](books.length)
-        var s = 0
-        while (s < books.length) {
-          val sub = java.util.Arrays.copyOfRange(n, s * dsub, (s + 1) * dsub)
-          code(s) = nearestSub(sub, books(s)).toShort
-          s += 1
-        }
-        val list = bcCents.value.fold(0)(c => nearestFullD(n, c))
-        (id, code, list)
+        val (n, code) = encodeRow(v, bcCb.value.books, dsub)
+        (id, code, bcCents.value.fold(0)(c => Ann.nearestCentroid(n, c)))
       }
       .toDF(idCol, "pq_code", "list_id")
     val w = coded.write.mode("overwrite")
@@ -242,11 +224,8 @@ object Pq {
 
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val centsJson = cents.fold("null")(om.writeValueAsString)
-    val meta = s"""{"books":${om.writeValueAsString(cb.books)},"centroids":$centsJson}"""
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_graft_pq_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(meta.getBytes("UTF-8")) finally out.close()
+    Ann.writeIndexMeta(spark, path, "_graft_pq_meta.json",
+      s"""{"books":${om.writeValueAsString(cb.books)},"centroids":$centsJson}""")
   }
 
   /** Codebooks (+ optional IVF centroids) a [[buildPqIndex]] index
@@ -254,32 +233,12 @@ object Pq {
     */
   private def readIndexMeta(spark: SparkSession,
                             path: String): (Codebooks, Option[Array[Array[Double]]]) = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_graft_pq_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"$path has no _graft_pq_meta.json — not a buildPqIndex index")
-    val in = fs.open(metaPath)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    def mat3(n: com.fasterxml.jackson.databind.JsonNode): Array[Array[Array[Double]]] =
-      Array.tabulate(n.size()) { s =>
-        val b = n.get(s)
-        Array.tabulate(b.size()) { c =>
-          val row = b.get(c)
-          Array.tabulate(row.size())(i => row.get(i).asDouble())
-        }
-      }
+    val tree = Ann.readIndexMeta(spark, path, "_graft_pq_meta.json",
+      "buildPqIndex", "PQ")(Ann.nonEmptyArray(_, "books"))
     val books = tree.get("books")
-    require(books != null && books.isArray && books.size() > 0,
-      s"malformed PQ index metadata: $json")
-    val cents = tree.get("centroids")
-    val centsOpt =
-      if (cents == null || cents.isNull) None
-      else Some(Array.tabulate(cents.size()) { c =>
-        val row = cents.get(c)
-        Array.tabulate(row.size())(i => row.get(i).asDouble())
-      })
-    (Codebooks(mat3(books)), centsOpt)
+    val cents = tree.path("centroids")
+    (Codebooks(Array.tabulate(books.size())(s => Ann.matrix(books.get(s)))),
+      if (cents.isMissingNode || cents.isNull) None else Some(Ann.matrix(cents)))
   }
 
   /** Probe a [[buildPqIndex]] index: nearest `nprobe` lists prune the
@@ -292,50 +251,19 @@ object Pq {
                   query: DataFrame, idCol: String, vecCol: String, k: Int,
                   nprobe: Int = 4, shortlist: Int = 100): DataFrame = {
     val (cb, centsOpt) = readIndexMeta(spark, indexPath)
-    val q = collectOneQuery(query, vecCol, "Pq.pqIndexTopK")
+    val q = normalizedQuery(query, vecCol, "Pq.pqIndexTopK")
     val idx = spark.read.parquet(indexPath)
     val pruned = centsOpt.fold(idx) { cents =>
-      idx.filter(col("list_id").isin(nearestListsD(q, cents, nprobe): _*))
+      idx.filter(col("list_id").isin(Ann.nearestLists(q, cents, nprobe): _*))
     }
     val cand = pruned
       .select(col(idCol), adcExpr(distanceTable(q, cb), col("pq_code")).as("adc"))
       .orderBy(col("adc"), col(idCol))
       .limit(shortlist)
       .select(col(idCol))
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    import spark.implicits._
-    val joined = embs.join(broadcast(cand), Seq(idCol), "left_semi")
-      .crossJoin(broadcast(Seq(q.map(_.toFloat)).toDF("q_vec")))
-    joined
-      .select(col(idCol),
-        round(expr(s"graft_cosine(`$vecCol`, q_vec)"), 6).as("cos"))
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    Similarity.exactTopK(embs.join(broadcast(cand), Seq(idCol), "left_semi"),
+      Similarity.queryFrame(spark, q.map(_.toFloat)), idCol, vecCol, k)
   }
-
-  /** Nearest centroid to a normalized query by dot product. */
-  private def nearestFullD(q: Array[Double], cents: Array[Array[Double]]): Int = {
-    var best = 0; var bestDot = Double.NegativeInfinity
-    var c = 0
-    while (c < cents.length) {
-      val cent = cents(c)
-      var dot = 0.0; var i = 0
-      while (i < q.length) { dot += q(i) * cent(i); i += 1 }
-      if (dot > bestDot) { bestDot = dot; best = c }
-      c += 1
-    }
-    best
-  }
-
-  private def nearestListsD(q: Array[Double], cents: Array[Array[Double]],
-                            nprobe: Int): Seq[Int] =
-    cents.indices.map { c =>
-      val cent = cents(c)
-      var dot = 0.0; var i = 0
-      while (i < q.length) { dot += q(i) * cent(i); i += 1 }
-      c -> dot
-    }.sortBy(-_._2).take(nprobe).map(_._1)
 
   /** ADC shortlist + exact re-rank (the standard PQ deployment:
     * Jégou 2011 §V): [[search]] produces a `shortlist`-sized
@@ -349,21 +277,12 @@ object Pq {
   def searchRefined(encoded: DataFrame, embs: DataFrame, query: DataFrame,
                     idCol: String, vecCol: String, cb: Codebooks, k: Int,
                     shortlist: Int = 100): DataFrame = {
-    val spark = embs.sparkSession
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    import spark.implicits._
-    val cand = search(encoded, query, idCol, vecCol, cb, shortlist)
+    // one collect: the ADC table takes the normalized vector, the
+    // re-rank the raw one
+    val qv = Similarity.collectOneQuery(query, vecCol, "Pq.searchRefined")
+    val cand = adcTopK(encoded, Ann.normalize(qv.map(_.toDouble)), idCol, cb, shortlist)
       .select(col(idCol))
-    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qs.length == 1,
-      s"Pq.searchRefined expects exactly one query row, got ${qs.length}")
-    val joined = embs.join(broadcast(cand), Seq(idCol), "left_semi")
-      .crossJoin(broadcast(qs.toSeq.toDF("q_vec")))
-    joined
-      .select(col(idCol),
-        round(expr(s"graft_cosine(`$vecCol`, q_vec)"), 6).as("cos"))
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    Similarity.exactTopK(embs.join(broadcast(cand), Seq(idCol), "left_semi"),
+      Similarity.queryFrame(embs.sparkSession, qv), idCol, vecCol, k)
   }
 }

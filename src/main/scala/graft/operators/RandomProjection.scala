@@ -71,41 +71,4 @@ object RandomProjection {
       .select(col(idCol), posexplode(comps).as(Seq("j", "comp_e6")))
       .select(col(idCol), col("j").cast("int").as("j"), col("comp_e6"))
   }
-
-  /** The BROADCAST-MATRIX JOIN form of [[reduce]] — identical output
-    * on a DISTINCT-id input (spec-pinned), different plan for
-    * matrices too large to inline as literal arrays (say 4096x512 =
-    * 2M expression nodes). Precondition, shared with every consumer
-    * of the reduced table: `idCol` must be unique — this form's
-    * (id, j) aggregation would SUM duplicate ids' projections into
-    * one vector where [[reduce]] emits one projection per row, so on
-    * a dup-id frame the two forms diverge silently. Dedup first
-    * (the reduced table is keyed by id downstream anyway). The
-    * (i, j, s) sign frame is a broadcast side (dIn*dOut rows of three
-    * ints — megabytes into the thousands of dims), the vector
-    * posexplodes to (id, i, xe), the join is broadcast-hash, and the
-    * (id, j) aggregation ships ALREADY map-side-combined partial sums
-    * — one exchange of reduced rows, still no corpus-x-corpus work.
-    * Same drop rules as [[reduce]].
-    */
-  def reduceViaJoin(embs: DataFrame, idCol: String, vecCol: String,
-                    dIn: Int, dOut: Int,
-                    seed: String = "graft-rp"): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val signs = signMatrix(dIn, dOut, seed)
-    val entries = for { i <- 0 until dIn; j <- 0 until dOut }
-      yield (i, j, signs(i)(j).toLong)
-    val m = entries.toDF("i", "j", "s")
-    val xe = transform(col(vecCol),
-      x => floor(x.cast("double") * 1000000.0 + lit(0.5)).cast("long"))
-    embs
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dIn &&
-        !exists(col(vecCol), x => x.isNull))
-      .select(col(idCol), posexplode(xe).as(Seq("i", "xe")))
-      .join(broadcast(m), Seq("i"))
-      .groupBy(col(idCol), col("j"))
-      .agg(sum(col("xe") * col("s")).as("comp_e6"))
-      .select(col(idCol), col("j").cast("int").as("j"), col("comp_e6"))
-  }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: centroids train on a driver-bounded sample
   * ([[Ann.trainCentroids]]), assignment is one scan with the centroid
-  * matrix broadcast, and intra-cluster pairing runs the codebase's
-  * sanctioned pair-kernel pattern ([[Dedup.embeddingPairs]]) keyed by
-  * (cluster, block-combo): rows replicate row-local to their combos,
+  * matrix broadcast, and intra-cluster pairing runs
+  * [[Dedup.embeddingPairs]]' pair kernel ([[Dedup.comboPairs]]) keyed
+  * by (cluster, block-combo): rows replicate row-local to their combos,
   * ONE explicit-count shuffle pins the work, and a primitive-float
   * loop scores pairs without materializing them as rows. Sub-block
   * counts come from a per-cluster occupancy pass, so a skewed cluster
@@ -36,7 +36,6 @@ object SemDedup {
   def intraClusterPairs(assigned: DataFrame, idCol: String, vecCol: String,
                         minCosine: Double, targetBlock: Int = 4096): DataFrame = {
     val spark = assigned.sparkSession
-    import spark.implicits._
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val base = assigned.filter(col(vecCol).isNotNull)
       .select(col("list_id").cast("int"), col(idCol).cast("long").as("id"),
@@ -68,109 +67,12 @@ object SemDedup {
     val par = spark.sparkContext.defaultParallelism
     val pairParts = math.max(par,
       math.min(par * 8L, totalCombos).toInt)
-    val copies = base
-      .join(broadcast(nsub), Seq("list_id"))
-      .withColumn("g", pmod(xxhash64(col("id")), col("nsub")).cast("int"))
-      // row-local combo membership, same algebra as the exact kernel:
-      // side A of (g, g..nsub-1), side B of (0..g-1, g)
-      .select(col("list_id"), explode(expr(
-        """concat(
-          |  transform(sequence(g, nsub - 1),
-          |    j -> named_struct('ba', g, 'bb', j, 'is_a', true)),
-          |  filter(transform(sequence(0, g),
-          |    i -> named_struct('ba', i, 'bb', g, 'is_a', false)),
-          |    s -> s.ba < g)
-          |)""".stripMargin)).as("c"), col("id"), col("vec"))
-      .select(col("list_id"), col("c.ba"), col("c.bb"), col("c.is_a"),
-        col("id"), col("vec"))
-      // explicit partition count (combo-derived, see pairParts above)
-      .repartition(pairParts, col("list_id"), col("ba"), col("bb"))
-      .as[(Int, Int, Int, Boolean, Long, Array[Float])]
-    val guard = minCosine - 1e-6
-    copies.mapPartitions { rows =>
-      import scala.collection.mutable
-      final class Side {
-        val ids = mutable.ArrayBuffer.empty[Long]
-        val vecs = mutable.ArrayBuffer.empty[Array[Float]]
-      }
-      // several (cluster, combo) keys can hash to one partition —
-      // group locally; key packs (list_id, ba, bb)
-      val combos = mutable.LinkedHashMap.empty[(Int, Int, Int), (Side, Side)]
-      rows.foreach { case (listId, ba, bb, isA, id, vec) =>
-        val c = combos.getOrElseUpdate((listId, ba, bb), (new Side, new Side))
-        val s = if (isA) c._1 else c._2
-        s.ids += id
-        s.vecs += vec
-      }
-      // identical arithmetic to graft_cosine / the exact kernel:
-      // widen to double, sequential accumulation, per-row norms
-      // precomputed — bitwise-equal cosines to embeddingPairs, which
-      // the equivalence spec relies on
-      def sqNorm(v: Array[Float]): Double = {
-        var na = 0.0; var i = 0
-        while (i < v.length) { val x = v(i).toDouble; na += x * x; i += 1 }
-        na
-      }
-      def dotp(x: Array[Float], y: Array[Float], n: Int): Double = {
-        var d = 0.0; var i = 0
-        while (i < n) { d += x(i).toDouble * y(i).toDouble; i += 1 }
-        d
-      }
-      def raggedCos(x: Array[Float], y: Array[Float]): Double = {
-        val n = math.min(x.length, y.length)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xi = x(i).toDouble; val yi = y(i).toDouble
-          dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
-        }
-        dot / math.sqrt(na * nb)
-      }
-      def round6(d: Double): Double =
-        if (d.isNaN || d.isInfinity) d
-        else BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = mutable.ArrayBuffer.empty[(Long, Long, Double, Int)]
-      combos.foreach { case ((listId, ba, bb), (sa, sb)) =>
-        def score(idA: Long, xa: Array[Float], na: Double,
-                  idB: Long, xb: Array[Float], nb: Double): Unit = {
-          if (idA != idB) {
-            val c =
-              if (xa.length == xb.length) dotp(xa, xb, xa.length) / math.sqrt(na * nb)
-              else raggedCos(xa, xb)
-            if (!c.isNaN && c >= guard) {
-              val r = round6(c)
-              if (!r.isNaN && r >= minCosine)
-                out += ((math.min(idA, idB), math.max(idA, idB), r, listId))
-            }
-          }
-        }
-        val aIds = sa.ids; val aVecs = sa.vecs
-        val aNorms = Array.tabulate(aVecs.length)(i => sqNorm(aVecs(i)))
-        if (ba == bb) {
-          var i = 0
-          while (i < aVecs.length) {
-            var j = i + 1
-            while (j < aVecs.length) {
-              score(aIds(i), aVecs(i), aNorms(i), aIds(j), aVecs(j), aNorms(j))
-              j += 1
-            }
-            i += 1
-          }
-        } else {
-          val bIds = sb.ids; val bVecs = sb.vecs
-          val bNorms = Array.tabulate(bVecs.length)(i => sqNorm(bVecs(i)))
-          var i = 0
-          while (i < aVecs.length) {
-            var j = 0
-            while (j < bVecs.length) {
-              score(aIds(i), aVecs(i), aNorms(i), bIds(j), bVecs(j), bNorms(j))
-              j += 1
-            }
-            i += 1
-          }
-        }
-      }
-      out.iterator
-    }.toDF("id_a", "id_b", "cos", "list_id")
+    // explicit partition count (combo-derived, see pairParts above)
+    val copies = Dedup.comboCopies(base.join(broadcast(nsub), Seq("list_id"))
+        .select(col("list_id").as("grp"), col("id"), col("vec"),
+          pmod(xxhash64(col("id")), col("nsub")).cast("int").as("g"), col("nsub")))
+      .repartition(pairParts, col("grp"), col("ba"), col("bb"))
+    Dedup.comboPairs(copies, minCosine).withColumnRenamed("grp", "list_id")
   }
 
   /** Full SemDedup pass: train the quantizer, assign clusters, find

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.plans.GraftExtensions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -13,14 +13,60 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine via the native codegen'd [[graft.plans.CosineSimilarity]]
-    * expression (registered on demand); math identical to
-    * VectorFunctions.cosine but runs as a primitive loop.
+  /** The one query vector of a single-query probe, collected ONCE:
+    * the caller reuses it for routing and scoring. A count-then-
+    * crossJoin (or head()+crossJoin) would evaluate the query frame
+    * twice, so a non-deterministic source could pass the guard, or
+    * pick one vector's lists/buckets, and score a different vector.
+    * A multi-row frame fails loudly — a silent global top-k over
+    * mixed queries is a wrong answer, not a looser one — naming the
+    * batch form when there is one.
     */
-  private def cosineFast(df: DataFrame, a: String, b: String): Column = {
-    GraftExtensions.ensureRegistered(df.sparkSession)
-    expr(s"graft_cosine(`$a`, `$b`)")
+  private[operators] def collectOneQuery(query: DataFrame, vecCol: String,
+      what: String, batchForm: Option[String] = None): Array[Float] = {
+    val spark = query.sparkSession
+    import spark.implicits._
+    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
+    require(qs.length == 1,
+      s"$what expects exactly one query row, got ${qs.length}" +
+        batchForm.fold("")(b => s" (use $b for a batch of queries)"))
+    qs.head
   }
+
+  /** A collected query vector as the 1-row `q_vec` frame. */
+  private[operators] def queryFrame(spark: SparkSession, qv: Array[Float]): DataFrame = {
+    import spark.implicits._
+    Seq(qv).toDF("q_vec")
+  }
+
+  /** `cands` scored against the 1-row query frame `q` (broadcast):
+    * (idCol, cos, keep...) with `cos` the native codegen'd
+    * [[graft.plans.CosineSimilarity]] rounded to 6 places, over the
+    * crossed rows that pass `where`.
+    */
+  private[operators] def scored(cands: DataFrame, q: DataFrame, idCol: String,
+      vecCol: String, keep: Seq[String] = Nil,
+      where: Option[Column] = None): DataFrame = {
+    GraftExtensions.ensureRegistered(cands.sparkSession)
+    val crossed = cands.crossJoin(broadcast(q))
+    where.fold(crossed)(crossed.filter)
+      .select(col(idCol) +: round(expr(s"graft_cosine(`$vecCol`, `q_vec`)"), 6).as("cos") +:
+        keep.map(col): _*)
+      // zero-norm vectors give NaN, which Spark sorts ABOVE all reals
+      // descending — drop them or they'd squat in the top-k
+      .filter(!isnan(col("cos")))
+  }
+
+  /** The exact re-rank tail of every single-query probe: [[scored]],
+    * then the top k by (cos desc, id) — ties resolve by id so results
+    * are deterministic.
+    */
+  private[operators] def exactTopK(cands: DataFrame, q: DataFrame, idCol: String,
+      vecCol: String, k: Int, keep: Seq[String] = Nil,
+      where: Option[Column] = None): DataFrame =
+    scored(cands, q, idCol, vecCol, keep, where)
+      .orderBy(col("cos").desc, col(idCol))
+      .limit(k)
 
   /** Exact top-k by cosine to one query vector. The query side is a
     * 1-row broadcast; ordering ties resolve by id so results are
@@ -30,24 +76,8 @@ object Similarity {
     */
   def bruteForceTopK(embs: DataFrame, query: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    // collect ONCE and broadcast the collected row: a count-then-
-    // crossJoin would evaluate the query frame twice, so a
-    // non-deterministic source could pass the guard and still score a
-    // different (or second) vector
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qs.length == 1,
-      s"bruteForceTopK expects exactly one query row, got ${qs.length}" +
-        " (use bruteForceTopKEach for a batch of queries)")
-    val joined = embs.crossJoin(broadcast(qs.toSeq.toDF("q_vec")))
-    joined
-      .select(col(idCol), round(cosineFast(joined, vecCol, "q_vec"), 6).as("cos"))
-      // zero-norm vectors give NaN, which Spark sorts ABOVE all
-      // reals descending — drop them or they'd squat in the top-k
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    val qv = collectOneQuery(query, vecCol, "bruteForceTopK", Some("bruteForceTopKEach"))
+    exactTopK(embs, queryFrame(embs.sparkSession, qv), idCol, vecCol, k)
   }
 
   /** Exact RANGE search: every vector with cosine >= `minCos` to the
@@ -64,15 +94,9 @@ object Similarity {
     */
   def rangeSearch(embs: DataFrame, query: DataFrame, idCol: String,
                   vecCol: String, minCos: Double): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qs.length == 1,
-      s"rangeSearch expects exactly one query row, got ${qs.length}")
-    val joined = embs.crossJoin(broadcast(qs.toSeq.toDF("q_vec")))
-    joined
-      .select(col(idCol), round(cosineFast(joined, vecCol, "q_vec"), 6).as("cos"))
-      .filter(!isnan(col("cos")) && col("cos") >= minCos)
+    val qv = collectOneQuery(query, vecCol, "rangeSearch")
+    scored(embs, queryFrame(embs.sparkSession, qv), idCol, vecCol)
+      .filter(col("cos") >= minCos)
       .orderBy(col("cos").desc, col(idCol))
   }
 
@@ -108,28 +132,15 @@ object Similarity {
     // the plane count is part of the index layout: persist it next to
     // the data so probes can't silently use a mismatched count (which
     // would probe buckets that don't exist and return wrong neighbors)
-    val spark = embs.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_graft_lsh_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(s"""{"planes":$planes}""".getBytes("UTF-8"))
-    finally out.close()
+    Ann.writeIndexMeta(embs.sparkSession, path, "_graft_lsh_meta.json",
+      s"""{"planes":$planes}""")
   }
 
   /** Read the plane count a [[buildLshIndex]] index was built with. */
-  private def indexPlanes(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String): Int = {
-    val metaPath = new org.apache.hadoop.fs.Path(indexPath, "_graft_lsh_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
-      s"$indexPath has no _graft_lsh_meta.json — not a buildLshIndex index")
-    val in = fs.open(metaPath)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"planes"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"malformed LSH index metadata: $json"))
-  }
+  private def indexPlanes(spark: SparkSession, indexPath: String): Int =
+    Ann.readIndexMeta(spark, indexPath, "_graft_lsh_meta.json",
+        "buildLshIndex", "LSH")(_.path("planes").isInt)
+      .get("planes").asInt()
 
   /** Probe a [[buildLshIndex]] index: multi-probe bucket set (all
     * buckets within `maxBitDiff` of the query's) is computed on the
@@ -137,7 +148,7 @@ object Similarity {
     * filter — the scan lists only those directories. Exact cosine
     * ranks the survivors.
     */
-  def lshIndexTopK(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  def lshIndexTopK(spark: SparkSession, indexPath: String,
                    query: DataFrame, idCol: String, vecCol: String, k: Int,
                    maxBitDiff: Int = 2): DataFrame = {
     GraftExtensions.ensureRegistered(spark)
@@ -160,15 +171,8 @@ object Similarity {
     val qVec = qRows.head.getAs[scala.collection.Seq[Float]]("q_vec").toArray
     val qBucket = qRows.head.getAs[Long]("q_bucket")
     val bucketSet = probeSet(qBucket, planes, maxBitDiff)
-    import spark.implicits._
-    val indexed = spark.read.parquet(indexPath)
-      .filter(col("bucket").isin(bucketSet: _*))
-      .crossJoin(broadcast(Seq(qVec).toDF("q_vec")))
-    indexed
-      .select(col(idCol), round(cosineFast(indexed, vecCol, "q_vec"), 6).as("cos"))
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    exactTopK(spark.read.parquet(indexPath).filter(col("bucket").isin(bucketSet: _*)),
+      queryFrame(spark, qVec), idCol, vecCol, k)
   }
 
   /** Batch probe of a [[buildLshIndex]] index: one collect computes
@@ -181,7 +185,7 @@ object Similarity {
     * limit, so the shuffle carries at most k rows per query per map
     * partition). Output: (q_id, idCol, cos).
     */
-  def lshIndexTopKEach(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+  def lshIndexTopKEach(spark: SparkSession, indexPath: String,
                        query: DataFrame, qIdCol: String, idCol: String,
                        vecCol: String, k: Int, maxBitDiff: Int = 2): DataFrame = {
     GraftExtensions.ensureRegistered(spark)
@@ -220,23 +224,11 @@ object Similarity {
               maxBitDiff: Int = 2): DataFrame = {
     val spark = embs.sparkSession
     GraftExtensions.ensureRegistered(spark)
-    import spark.implicits._
-    // collect once; see bruteForceTopK for the double-evaluation trap
-    val qs = query.select(col(vecCol)).as[Array[Float]].take(2)
-    require(qs.length == 1,
-      s"lshTopK expects exactly one query row, got ${qs.length}")
-    // native one-pass signature (codegen'd, cached plane matrix) —
-    // the HOF srpBucket re-hashed every (plane, dim) pair per row
-    val sig = expr(s"graft_srp_buckets(`$vecCol`, $planes, 1)")(0)
-    val bucketed = embs.withColumn("bucket", sig)
-    val q = qs.toSeq.toDF(vecCol)
-      .select(col(vecCol).as("q_vec"), sig.as("q_bucket"))
-    val joined = bucketed.crossJoin(broadcast(q))
-      .filter(bit_count(col("bucket").bitwiseXOR(col("q_bucket"))) <= maxBitDiff)
-    joined
-      .select(col(idCol), round(cosineFast(joined, vecCol, "q_vec"), 6).as("cos"))
-      .filter(!isnan(col("cos")))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    val qv = collectOneQuery(query, vecCol, "lshTopK")
+    // native one-pass signature (codegen'd, cached plane matrix)
+    def sig(c: String): Column = expr(s"graft_srp_buckets(`$c`, $planes, 1)")(0)
+    val q = queryFrame(spark, qv).select(col("q_vec"), sig("q_vec").as("q_bucket"))
+    exactTopK(embs.withColumn("bucket", sig(vecCol)), q, idCol, vecCol, k,
+      where = Some(bit_count(col("bucket").bitwiseXOR(col("q_bucket"))) <= maxBitDiff))
   }
 }

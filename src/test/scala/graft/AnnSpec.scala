@@ -143,6 +143,16 @@ class AnnSpec extends SparkSpec {
       rows.length, "duplicate (id_a, id_b) — a pair met more than once")
   }
 
+  test("knn kernel rounds a 7th-decimal tie HALF_UP, as the candidates formulation does") {
+    val kernel = Ann.knnJoin(cosineTie, "vec_id", "embedding", k = 1, planes = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val reference = Ann.knnCandidates(cosineTie, "vec_id", "embedding",
+        planes = 1, targetBucket = 1024, bucketCap = 8192)
+      .collect().map(r => (r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
+    assert(kernel == Set((1L, 2L, 0.950001), (2L, 1L, 0.950001)))
+    assert(kernel == reference)
+  }
+
   test("knn kernel matches the candidates+window formulation exactly") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._

@@ -401,6 +401,12 @@ class DedupSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 2L)))
   }
 
+  test("embedding pair kernel rounds a 7th-decimal tie HALF_UP, as Spark's round does") {
+    val out = Dedup.embeddingPairs(cosineTie, "vec_id", "embedding", minCosine = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(out.toSeq == Seq((1L, 2L, 0.950001)))
+  }
+
   test("embedding pairs never emit id_a == id_b for duplicate-id input") {
     // two rows share id 1 (identical vectors, cosine 1.0): the join
     // formulation's id_a < id_b diagonal filter excluded the

@@ -98,6 +98,24 @@ class GatedJoinSpec extends SparkSpec {
       "detector did not flag the ungated shuffle-join form — canary is vacuous")
   }
 
+  /** The gated queries whose operators take a [[graft.operators.TextFilters.useMinedBroadcast]]
+    * decision. dedup_exact (Dedup.exact is one groupBy) and
+    * dedup_incremental (it calls incrementalNewBloom directly) reach
+    * no ceiling decision.
+    */
+  private val ceilingQueries = gatedQueries.filterNot(
+    Set("dedup_exact", "dedup_incremental"))
+
+  private def broadcastHints(df: DataFrame): Int =
+    "strategy=broadcast".r.findAllMatchIn(df.queryExecution.optimizedPlan.toString).size
+
+  for (q <- ceilingQueries)
+    test(s"$q: the ceiling rule hints broadcast below it and not above") {
+      val below = broadcastHints(SparkEntry.queries(q)(spark, sf0001))
+      val above = broadcastHints(SparkEntry.queries(q)(thresholdSession(1L), sf0001))
+      assert(below > above, s"$q: $below broadcast hint(s) below the ceiling, $above above")
+    }
+
   for (q <- gatedQueries)
     test(s"$q: zero shuffle exchanges carry raw corpus rows below the ceiling") {
       val df = SparkEntry.queries(q)(spark, sf0001)

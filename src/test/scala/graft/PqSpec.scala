@@ -105,6 +105,44 @@ class PqSpec extends SparkSpec {
     assert(out.count() == 10)
   }
 
+  test("searchRefined evaluates the query frame once") {
+    val embs = Tables.embeddings(spark, sf0001)
+    val cb = Pq.train(embs, "embedding", m = 8, ksub = 16, iters = 3)
+    val encoded = Pq.encode(embs, "vec_id", "embedding", cb)
+    val evals = spark.sparkContext.longAccumulator("pq_query_evals")
+    val counted = udf { (v: Seq[Float]) => evals.add(1); v }.asNondeterministic()
+    val q = embs.filter(col("vec_id") === 0)
+      .select(counted(col("embedding")).as("embedding"))
+    val top = Pq.searchRefined(encoded, embs, q, "vec_id", "embedding", cb, k = 5)
+      .collect()
+    assert(top.head.getLong(0) == 0L)
+    assert(evals.value == 1L, s"query frame evaluated ${evals.value} times")
+  }
+
+  test("refined and indexed probes drop a zero-norm vector's NaN cosine") {
+    val embs = Tables.embeddings(spark, sf0001)
+    val zero = embs.filter(col("vec_id") === 0).select((col("vec_id") - 1).as("vec_id"),
+      transform(col("embedding"), x => x * 0f).as("embedding"))
+    val corpus = embs.select("vec_id", "embedding").union(zero)
+    val q = embs.filter(col("vec_id") === 0).select(col("embedding"))
+    val n = corpus.count().toInt
+    val cb = Pq.train(corpus, "embedding", m = 8, ksub = 16, iters = 3)
+    val encoded = Pq.encode(corpus, "vec_id", "embedding", cb)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_nan").toString
+    Pq.buildPqIndex(corpus, "vec_id", "embedding", dir, m = 8, ksub = 16, iters = 3)
+    // shortlists cover the whole corpus, so only the re-rank's NaN
+    // filter keeps the zero vector out
+    for (out <- Seq(
+        Pq.searchRefined(encoded, corpus, q, "vec_id", "embedding", cb,
+          k = n, shortlist = n),
+        Pq.pqIndexTopK(spark, dir, corpus, q, "vec_id", "embedding",
+          k = n, shortlist = n))) {
+      val rows = out.collect()
+      assert(rows.length == n - 1)
+      assert(!rows.exists(r => r.getLong(0) == -1L || r.getDouble(1).isNaN))
+    }
+  }
+
   test("multi-row query frame is rejected loudly") {
     val embs = Tables.embeddings(spark, sf0001)
     val cb = Pq.train(embs, "embedding", m = 8, ksub = 16, iters = 3)

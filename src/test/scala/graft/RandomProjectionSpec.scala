@@ -80,21 +80,4 @@ class RandomProjectionSpec extends SparkSpec {
     assert(dist2(0L, 1L) < dist2(0L, 2L),
       s"near ${dist2(0L, 1L)} must stay below far ${dist2(0L, 2L)}")
   }
-
-  test("broadcast-matrix join form is row-for-row identical to the inline form") {
-    val rows = (0L until 12L).map { id =>
-      (id, (0 until dIn).map(i =>
-        Double.box(math.sin(id * 31 + i) * 2.0)))
-    }
-    val inline = RandomProjection.reduce(vecDf(rows), "vec_id", "embedding",
-      dIn, dOut)
-    val joined = RandomProjection.reduceViaJoin(vecDf(rows), "vec_id",
-      "embedding", dIn, dOut)
-    val a = inline.collect().map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    val b = joined.collect().map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    assert(a == b)
-    assert(a.size == 12 * dOut)
-  }
 }

@@ -61,6 +61,13 @@ class SemDedupSpec extends SparkSpec {
     assert(got.length == 60 * 59 / 2, s"expected all pairs, got ${got.length}")
   }
 
+  test("intra-cluster kernel rounds a 7th-decimal tie HALF_UP, as Spark's round does") {
+    val out = SemDedup.intraClusterPairs(cosineTie.withColumn("list_id", lit(3)),
+        "vec_id", "embedding", minCosine = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    assert(out.toSeq == Seq((1L, 2L, 0.950001, 3)))
+  }
+
   test("no cross-cluster pairs even for identical vectors in different clusters") {
     val df = Seq(
       (1L, vec(1, 0, 0, 0)), (2L, vec(1, 0, 0, 0))

@@ -112,6 +112,23 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("single-query probes drop a zero-norm vector's NaN cosine") {
+    // NaN sorts ABOVE every real descending and passes `>=` in Spark,
+    // so without the NaN filter the zero vector heads both results
+    val zero = embs.filter(col("vec_id") === 0).select((col("vec_id") - 1).as("vec_id"),
+      transform(col("embedding"), x => x * 0f).as("embedding"))
+    val corpus = embs.select("vec_id", "embedding").union(zero)
+    val q = embs.filter(col("vec_id") === 0).select(col("embedding"))
+    val n = corpus.count().toInt
+    for (out <- Seq(
+        Similarity.bruteForceTopK(corpus, q, "vec_id", "embedding", k = n),
+        Similarity.rangeSearch(corpus, q, "vec_id", "embedding", minCos = -1.0))) {
+      val rows = out.collect()
+      assert(rows.length == n - 1)
+      assert(!rows.exists(r => r.getLong(0) == -1L || r.getDouble(1).isNaN))
+    }
+  }
+
   test("batch top-k matches per-query single probes") {
     val queries = embs.filter(col("vec_id") < 3)
     val corpus = embs.filter(col("vec_id") >= 3)

@@ -9,6 +9,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** Two vectors (vec_id 1, 2) whose cosine is 1900001 / 2e6 =
+    * 0.9500005 in double arithmetic — every term and squared norm is
+    * an exact integer — a 7th-decimal tie that Spark's round(·, 6)
+    * takes HALF_UP to 0.950001. */
+  def cosineTie: DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq((1L, Array(1f, 0f, 0f, 0f, 0f)),
+      (2L, Array(1900001f, 624495f, 1481f, 38f, 13f))).toDF("vec_id", "embedding")
+  }
+
   /** A clone of the shared session whose broadcast threshold is
     * `bytes`: every size-driven broadcast ceiling in the operators
     * scales from it, so 1 puts any real input above the ceiling. */
